@@ -10,9 +10,11 @@ and ships no parser (SURVEY §2; the north_star adds the gate). Here:
   (longest pattern in octets) wins; on a tie the least restrictive
   (Allow) wins; no match -> allowed. ``*`` matches any character
   sequence and a trailing ``$`` anchors the pattern at the path end.
-* ``build_robots_rules`` — DataFrame of fetched ``/robots.txt`` payloads
-  -> ``{host: [rule, ...]}``, the broadcast dim the engine's link gate
-  probes (plans/parse_stage.py).
+* ``build_robots_rules_df`` — DataFrame of fetched ``/robots.txt``
+  payloads -> the ``(host, rules)`` dim the engine joins onto candidate
+  links (``robots_gate_join``); ``build_robots_rules`` collects it to the
+  ``{host: [rule, ...]}`` dict the oracle crawler and ``robots_allows``
+  take.
 
 Rule encoding: each rule is a string whose first character tags it —
 ``"+<pattern>"`` = Allow, ``"-<pattern>"`` = Disallow. A bare pattern
@@ -49,7 +51,6 @@ __all__ = [
     "build_robots_rules",
     "build_robots_rules_df",
     "parse_crawl_delay",
-    "build_crawl_delays",
     "build_crawl_delays_df",
     "robots_gate_join",
     "robots_allows",
@@ -242,14 +243,13 @@ def build_crawl_delays_df(
     agent: str = "*",
 ):
     """Fetched robots.txt payloads -> the per-domain ``Crawl-delay`` dim
-    as a DATAFRAME ``(domain string, crawl_delay double)`` — the
-    host-scale path (mirror of robots_gate_join): parsing runs as an
-    Arrow stage on the executors and the dim NEVER lands on the driver.
-    The engine joins it onto the dequeued batch by domain
-    (EngineConfig.crawl_delays_df), so at 10^7 hosts the delays ride the
-    domain-partitioned fetch stage as a column instead of a driver dict.
-    Hosts whose robots.txt declares no delay emit no row (the pacer
-    falls back to the config default for them)."""
+    as a DATAFRAME ``(domain string, crawl_delay double)``: parsing runs
+    as an Arrow stage on the executors and the dim NEVER lands on the
+    driver. The engine joins it onto the dequeued batch by domain
+    (CrawlEngine's ``crawl_delays_df``), so at 10^7 hosts the delays ride
+    the domain-partitioned fetch stage as a column. Hosts whose
+    robots.txt declares no delay emit no row (the pacer falls back to
+    the config default for them)."""
     import pandas as pd
 
     def stage(batches):
@@ -277,36 +277,16 @@ def build_crawl_delays_df(
     )
 
 
-def build_crawl_delays(
-    robots_pages,
-    host_col: str = "host",
-    payload_col: str = "payload",
-    agent: str = "*",
-) -> dict[str, float]:
-    """{host: crawl-delay seconds} — the small-crawl convenience path
-    (EngineConfig.crawl_delays): collects build_crawl_delays_df to a
-    driver dict, O(declaring hosts) floats. For host counts where a
-    driver dict is wrong, pass the DataFrame itself as
-    EngineConfig.crawl_delays_df instead."""
-    return {
-        r.domain: float(r.crawl_delay)
-        for r in build_crawl_delays_df(
-            robots_pages, host_col, payload_col, agent
-        ).collect()
-    }
-
-
-def build_robots_rules(
+def build_robots_rules_df(
     robots_pages: DataFrame,
     host_col: str = "host",
     payload_col: str = "payload",
     agent: str = "*",
-) -> dict[str, list[str]]:
-    """Fetched ``/robots.txt`` payloads -> the gate's rules dict.
-
-    Parsing runs as an Arrow stage on the executors; only the (host,
-    rules) pairs — one narrow row per host, the natural broadcast dim —
-    come back to build the dict the per-link gate probes."""
+) -> DataFrame:
+    """Fetched ``/robots.txt`` payloads -> the parsed ``(host, rules)``
+    dim, kept a DataFrame so O(hosts) rules never reach the driver.
+    Parsing runs as an Arrow stage on the executors; hosts without rules
+    emit no row. Feed the result to :func:`robots_gate_join`."""
     import pandas as pd
 
     def stage(batches):
@@ -333,50 +313,26 @@ def build_robots_rules(
                 }
             )
 
-    parsed = robots_pages.select(host_col, payload_col).mapInPandas(
+    return robots_pages.select(host_col, payload_col).mapInPandas(
         stage, schema="host string, rules array<string>"
     )
-    return {r.host: list(r.rules) for r in parsed.collect()}
 
 
-def build_robots_rules_df(
+def build_robots_rules(
     robots_pages: DataFrame,
     host_col: str = "host",
     payload_col: str = "payload",
     agent: str = "*",
-) -> DataFrame:
-    """The host-scale twin of :func:`build_robots_rules`: the parsed
-    ``(host, rules)`` dim stays a DataFrame — never collected — for
-    crawls with 10^7+ hosts where the broadcast dict would not fit the
-    driver (same escape hatch the watermark dim got). Feed the result to
-    :func:`robots_gate_join`."""
-    import pandas as pd
-
-    def stage(batches):
-        for pdf in batches:
-            hosts, rules_out = [], []
-            for row in pdf.itertuples(index=False):
-                payload = getattr(row, payload_col)
-                if payload is None:
-                    continue
-                if isinstance(payload, (bytes, bytearray)):
-                    text = bytes(payload).decode("utf-8", errors="replace")
-                else:
-                    text = str(payload)
-                rules = parse_robots_txt(text, agent=agent)
-                if rules:
-                    hosts.append(getattr(row, host_col))
-                    rules_out.append(rules)
-            yield pd.DataFrame(
-                {
-                    "host": pd.Series(hosts, dtype=object),
-                    "rules": pd.Series(rules_out, dtype=object),
-                }
-            )
-
-    return robots_pages.select(host_col, payload_col).mapInPandas(
-        stage, schema="host string, rules array<string>"
-    )
+) -> dict[str, list[str]]:
+    """:func:`build_robots_rules_df` collected to the ``{host: [rule,
+    ...]}`` dict :func:`robots_allows` and the oracle crawler take —
+    O(hosts) on the driver, so small crawls and tests only."""
+    return {
+        r.host: list(r.rules)
+        for r in build_robots_rules_df(
+            robots_pages, host_col, payload_col, agent
+        ).collect()
+    }
 
 
 # netloc per urllib.parse: everything between '://' and the first
@@ -389,8 +345,9 @@ def robots_gate_join(
 ) -> DataFrame:
     """Distributed robots gate: filter ``links`` to the RFC-9309-allowed
     rows by JOINING the ``(host, rules)`` dim from
-    :func:`build_robots_rules_df` instead of probing a broadcast driver
-    dict — O(hosts) never touches the driver.
+    :func:`build_robots_rules_df` — O(hosts) never touches the driver.
+    Per row it decides exactly what :func:`robots_allows` decides for the
+    same URL against the collected rules dict.
 
     Plan shape: netloc extraction is a scan-level regex; the join keys
     both sides on host (AQE picks broadcast while the dim is small and

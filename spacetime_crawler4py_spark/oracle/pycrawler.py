@@ -29,23 +29,12 @@ from ..functions.fingerprint import (
     shingle_fingerprints,
 )
 from ..functions.htmlparse import looks_like_xml, parse_page
+from ..functions.robots import robots_allows
 from ..functions.tokenize import similarity_tokens
 from ..functions.validity import is_valid
 from ..sources.webgen import SyntheticWeb
 
-__all__ = ["OracleCrawler", "OracleResult", "robots_allows"]
-
-
-def robots_allows(robots: dict[str, list[str]] | None, url: str) -> bool:
-    """Robots gate (north_star addition; the reference delegates robots to
-    its cache server and has no implementation). Delegates to
-    functions.robots.robots_allows: RFC 9309 longest-match precedence over
-    Allow/Disallow rules with ``*``/``$`` wildcard support, plus
-    back-compat for bare Disallow-prefix rule lists. Kept as a re-export
-    so the engine, the oracle crawler, and the tests share one gate."""
-    from ..functions.robots import robots_allows as _allows
-
-    return _allows(robots, url)
+__all__ = ["OracleCrawler", "OracleResult"]
 
 
 @dataclass
@@ -197,7 +186,14 @@ class OracleCrawler:
             pop_idx += 1
             links = self._scrape(url)
             for link in links:
-                if is_valid(link) and robots_allows(self.robots, link):
+                # robots gate (north_star addition; the reference delegates
+                # robots to its cache server): RFC 9309 §2.2.2 matches
+                # rules against the path of the URL actually requested,
+                # i.e. the canonical form add_url enqueues — the same
+                # URL the engine's robots_gate_join judges
+                if is_valid(link) and robots_allows(
+                    self.robots, urlkit.normalize(link)
+                ):
                     self.add_url(link)  # worker.py:29-31
             self._mark_complete(url)
         self.result.seen = dict(self.seen)

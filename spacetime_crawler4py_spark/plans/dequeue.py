@@ -1,15 +1,12 @@
 """Politeness dequeue: per-domain FIFO heads under a token budget.
 
 The reference's blocking heap scheduler (crawler/frontier.py:61-87) maps
-to three strategies, strongest first:
+to two strategies:
 
 * ``politeness_heads_indexed`` — the scale path (round 2). Rows carry a
   permanent per-domain FIFO position (``seq``); dequeue is the filter
   ``served < seq <= served + tokens`` against the broadcast watermark
   dim. No window, no shuffle, skew-immune.
-* ``politeness_heads_watermarked`` — the round-1 shape kept for
-  reference/back-compat: watermark-offset double window over the full
-  frontier (two-level salted rank bounds the hot-domain task).
 * ``politeness_heads`` — the exact parity mode's ranked selection over
   the pending anti-join (small rounds, reference-identical ordering).
 
@@ -28,28 +25,28 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "politeness_heads",
-    "politeness_heads_watermarked",
     "politeness_heads_indexed",
     "DISCOVERY_ORDER",
+    "SALT_BUCKETS",
 ]
 
 # the deterministic per-domain FIFO key (SURVEY §2.6 'seq')
 DISCOVERY_ORDER = ["rk_round", "rk_pop", "rk_pos"]
 
+# skew salting (north_rule): the frontier's salt column spreads a hot
+# domain's rows over this many buckets for the salted rank below
+SALT_BUCKETS = 8
 
-# columns the downstream fetch/parse stage needs; ranking shuffles only
-# these. In the relaxed/scale path url_hash is deliberately ABSENT: the
-# 64-char sha256 hex would be the widest column through both window
-# shuffles, and the parse stage recomputes it from the canonical url for
-# free (urlkit.url_hash). The exact-parity path keeps it (tiny rounds).
-HEAD_COLUMNS = ["url", "domain", "salt", *DISCOVERY_ORDER]
+
+# columns the exact mode's fetch/parse stage needs; ranking shuffles only
+# these (url_hash included: exact rounds are tiny)
 EXACT_HEAD_COLUMNS = ["url", "url_hash", "domain", "salt", *DISCOVERY_ORDER]
 
 
 def politeness_heads(pending: DataFrame, tokens: int, salted: bool = True) -> DataFrame:
     """Select the first ``tokens`` pending URLs per domain in FIFO order;
     adds a ``slot`` column (1-based politeness round within this batch).
-    Projects to HEAD_COLUMNS first so the two window shuffles move only
+    Projects to EXACT_HEAD_COLUMNS first so the two window shuffles move only
     what fetch needs (lineage columns like parent stay behind)."""
     order = [F.col(c).asc() for c in DISCOVERY_ORDER]
     slim = pending.select(
@@ -71,7 +68,8 @@ def politeness_heads(pending: DataFrame, tokens: int, salted: bool = True) -> Da
     )
 
 
-# the indexed (scale) dequeue ships only what fetch needs
+# the indexed (scale) dequeue ships only what fetch needs; no url_hash
+# (the widest column): the parse stage recomputes it from the canonical url
 INDEXED_HEAD_COLUMNS = ["url", "domain", "seq", *DISCOVERY_ORDER]
 
 
@@ -85,7 +83,7 @@ def politeness_heads_indexed(
 
     Every frontier row carries ``seq`` — its permanent 1-based position in
     its domain's FIFO, assigned once at insert (cheap: a window over each
-    epoch's *new-rows batch* plus a broadcast per-domain offset; valid
+    epoch's *new-rows batch* plus a per-domain offset join; valid
     because the FIFO key's leading component is the strictly increasing
     epoch counter, so later inserts always sort after earlier ones). The
     politeness dequeue is then ``served < seq <= served + tokens`` against
@@ -121,43 +119,3 @@ def politeness_heads_indexed(
         .drop("served")
     )
 
-
-def politeness_heads_watermarked(
-    frontier: DataFrame,
-    watermarks: DataFrame | None,
-    tokens: int,
-    salted: bool = True,
-) -> DataFrame:
-    """Relaxed-mode dequeue without a completions anti-join.
-
-    Every insertion sorts after every row already served in its domain
-    (rk_round = the epoch it was added, monotone across epochs, and a row
-    can only be served in a *later* epoch than it was added), so the served
-    set is always a prefix of the per-domain FIFO. A tiny broadcast
-    ``(domain, served)`` watermark table therefore replaces the O(|frontier|
-    + |completions|) anti-join shuffle: offset the window rank and keep
-    ``served < rn <= served + tokens``, ``slot = rn - served``."""
-    order = [F.col(c).asc() for c in DISCOVERY_ORDER]
-    slim = frontier.select(*[c for c in HEAD_COLUMNS if c in frontier.columns])
-    if watermarks is not None:
-        slim = slim.join(F.broadcast(watermarks), "domain", "left")
-        slim = slim.withColumn(
-            "_served", F.coalesce(F.col("served"), F.lit(0))
-        ).drop("served")
-    else:
-        slim = slim.withColumn("_served", F.lit(0))
-    cap = F.col("_served") + tokens
-    if salted and "salt" in slim.columns:
-        local = Window.partitionBy("domain", "salt").orderBy(*order)
-        slim = (
-            slim.withColumn("_lrn", F.row_number().over(local))
-            .where(F.col("_lrn") <= cap)
-            .drop("_lrn")
-        )
-    per_domain = Window.partitionBy("domain").orderBy(*order)
-    return (
-        slim.withColumn("_rn", F.row_number().over(per_domain))
-        .where((F.col("_rn") > F.col("_served")) & (F.col("_rn") <= cap))
-        .withColumn("slot", (F.col("_rn") - F.col("_served")).cast("int"))
-        .drop("_rn", "_served")
-    )

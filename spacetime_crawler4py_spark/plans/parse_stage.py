@@ -44,12 +44,9 @@ def _signed64(v: int) -> int:
 
 
 def make_parse_stage(
-    robots: dict[str, list[str]] | None = None,
-    minhash_perm: int = 64,
     fetcher=None,
     compute_sketches: bool = True,
     politeness_delay: float = 0.0,
-    domain_delays: dict[str, float] | None = None,
     delay_col: str | None = None,
     clock=None,
 ):
@@ -71,25 +68,22 @@ def make_parse_stage(
     wallclock_politeness mode does) — two partitions holding the same
     domain would pace independently. ``clock`` (monotonic()/sleep())
     is injectable for the fake-clock property test; defaults to ``time``.
-    ``domain_delays`` ({domain: seconds}, from robots.txt ``Crawl-delay``
-    via functions.robots.build_crawl_delays) overrides the base delay
-    per domain — a declared crawl-delay wins over the config default in
-    EITHER direction, matching how polite crawlers treat the directive.
-    ``delay_col`` is the HOST-SCALE form of the same override: the name
-    of a double column on the input rows carrying that row's declared
-    crawl-delay (NULL = none declared -> config default), joined in by
-    the caller from functions.robots.build_crawl_delays_df — no driver
-    dict at any host count. When both are given the column wins.
+    ``delay_col`` names a double column on the input rows carrying that
+    row's robots.txt ``Crawl-delay`` (NULL = none declared -> config
+    default), joined in by the caller from
+    functions.robots.build_crawl_delays_df. A declared crawl-delay wins
+    over the config default in EITHER direction, matching how polite
+    crawlers treat the directive.
     The sandbox bench/oracle paths keep politeness VIRTUAL (epoch token
-    budgets) and leave this off — real HTTP deployments turn it on."""
-    from ..oracle.pycrawler import robots_allows  # shared gate
+    budgets) and leave this off — real HTTP deployments turn it on.
 
+    Outlinks are not robots-gated here: the engine joins its robots dim
+    onto the canonical candidate URLs after the stage."""
     if clock is None:
         import time as clock  # noqa: F811 — module provides monotonic+sleep
     pace = fetcher is not None and (
-        politeness_delay > 0 or bool(domain_delays) or delay_col is not None
+        politeness_delay > 0 or delay_col is not None
     )
-    delays = domain_delays or {}
 
     def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         last_fetch: dict[str, float] = {}  # per-partition pacing state
@@ -124,14 +118,12 @@ def make_parse_stage(
                         now = clock.monotonic()
                         due = last_fetch.get(row.domain)
                         if due is not None:
-                            dly = None
+                            dly = politeness_delay
                             if delay_col is not None:
                                 v = getattr(row, delay_col, None)
                                 # pandas renders a NULL double as NaN
                                 if v is not None and v == v:
                                     dly = float(v)
-                            if dly is None:
-                                dly = delays.get(row.domain, politeness_delay)
                             wait = due + dly - now
                             if wait > 0:
                                 clock.sleep(wait)
@@ -187,22 +179,23 @@ def make_parse_stage(
                     }
                     for s in page.spans
                 ]
-                if compute_sketches:  # near-dup inputs (skipped when off)
+                # near-dup inputs (skipped when off); the signature keeps
+                # minhash_signature's fixed 64 permutations, so every
+                # persisted band set is comparable under SKETCH_SCHEME
+                if compute_sketches:
                     tokens = similarity_tokens(page.page_text)
                     rec["fps"] = sorted(
                         _signed64(v) for v in shingle_fingerprints(tokens)
                     )
                     rec["bands"] = [
                         _signed64(b)
-                        for b in minhash_bands(minhash_signature(tokens, minhash_perm))
+                        for b in minhash_bands(minhash_signature(tokens))
                     ]
                 links = []
                 pos = 0
                 for link in page.outlinks:  # already defragged + page-deduped
                     if not is_valid(link):
                         continue  # worker loop filter (scraper.py:142)
-                    if not robots_allows(robots, link):
-                        continue  # north_star robots gate
                     normalized = urlkit.normalize(link)  # frontier.py:90
                     links.append(
                         {

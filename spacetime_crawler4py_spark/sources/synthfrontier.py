@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.urlkit import udf_url_hash
+from ..plans.dequeue import SALT_BUCKETS
 
 __all__ = ["synthetic_crawl_inputs", "make_synthetic_fetcher"]
 
@@ -95,7 +96,6 @@ def synthetic_crawl_inputs(
     hot_fraction: float = 0.25,
     out_degree: int = 8,
     n_words: int = 120,
-    salt_buckets: int = 8,
     seed_fraction: float = 1.0,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (frontier_df with engine FRONTIER_SCHEMA columns, web_df).
@@ -126,7 +126,7 @@ def synthetic_crawl_inputs(
         udf_url_hash("url").alias("url_hash"),
         "url",
         "domain",
-        F.pmod(F.xxhash64("url"), F.lit(salt_buckets)).cast("int").alias("salt"),
+        F.pmod(F.xxhash64("url"), F.lit(SALT_BUCKETS)).cast("int").alias("salt"),
         F.lit(None).cast("string").alias("parent"),
         F.lit(-1).cast("bigint").alias("rk_round"),
         F.lit("").alias("rk_pop"),

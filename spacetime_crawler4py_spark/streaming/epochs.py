@@ -26,15 +26,26 @@ Two ordering disciplines:
   (the one documented scheduling deviation — URL-seen set and per-domain
   FIFO discipline are unaffected).
 
-State lives in the SnapshotStore tables (frontier, completions, documents,
-fingerprints, fetch_log, metrics); the engine can be killed and resumed
-from the latest snapshot (reference resume semantics frontier.py:48-59).
+Each politeness dimension has one home, a table or DataFrame; in relaxed
+mode none is a driver dict, so driver state stays O(1) at any host count:
+
+* per-domain watermarks (served, enqueued) — the ``watermarks`` table,
+  advanced per epoch by a distributed merge (relaxed mode; exact mode
+  keeps only its own seq counter, rebuilt from the frontier at resume);
+* robots rules — the ``robots_df`` ``(host, rules)`` dim, joined onto
+  candidate links in both modes (functions.robots.robots_gate_join);
+* crawl delays — the ``crawl_delays_df`` ``(domain, crawl_delay)`` dim,
+  joined onto the dequeued batch for the wall-clock pacer.
+
+State lives in the SnapshotStore tables (frontier, seen, watermarks,
+completions, documents, fingerprints, fetch_log, metrics); the engine can
+be killed and resumed from the latest snapshot (reference resume
+semantics frontier.py:48-59).
 """
 
 from __future__ import annotations
 
 import heapq
-import os
 import time
 import uuid
 from dataclasses import dataclass
@@ -45,8 +56,10 @@ from pyspark.sql import functions as F
 from ..functions import urlkit
 from ..functions.bloom import BloomFilter
 from ..functions.fingerprint import NEAR_DUP_TAU, SKETCH_SCHEME, jaccard
+from ..functions.robots import robots_gate_join
 from ..plans.dequeue import (
     DISCOVERY_ORDER,
+    SALT_BUCKETS,
     politeness_heads,
     politeness_heads_indexed,
 )
@@ -68,8 +81,6 @@ FRONTIER_SCHEMA = (
 COMPLETIONS_SCHEMA = "url_hash string, round bigint"
 SEEN_SCHEMA = "url_hash string"
 WATERMARKS_SCHEMA = "domain string, served bigint, enqueued bigint"
-# broadcast dim the dequeue filter probes (served only)
-_WM_BROADCAST_SCHEMA = "domain string, served bigint"
 DOCUMENTS_SCHEMA = (
     "doc_id string, domain string, round bigint, word_count int, "
     "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
@@ -124,10 +135,6 @@ def _arrow_schemas():
              ("gate", pa.string()), ("checksum", pa.string()),
              ("doc_id", pa.string())]
         ),
-        "watermarks": pa.schema(
-            [("domain", pa.string()), ("served", pa.int64()),
-             ("enqueued", pa.int64())]
-        ),
         "metrics": pa.schema(
             [("round", pa.int64()), ("pops", pa.int64()),
              ("parsed_ok", pa.int64()), ("new_urls", pa.int64()),
@@ -142,6 +149,10 @@ ARROW_SCHEMAS = _arrow_schemas()
 
 @dataclass
 class EngineConfig:
+    """Scalar knobs only; the per-domain politeness dims are DataFrames
+    passed to CrawlEngine (robots_df, crawl_delays_df) or tables in its
+    store (watermarks)."""
+
     politeness_delay: float = 0.5          # reference config.ini:12, floored
     # Defaults are the SCALE path: relaxed epoch ordering + banded-LSH
     # near-dup. The exact parity mode (reference-identical ordering, driver
@@ -157,65 +168,20 @@ class EngineConfig:
     # to the bloom false-positive sliver; turn off only for tiny crawls
     # where the filter build outweighs the join savings.
     use_bloom: bool = True
-    salt_buckets: int = 8                  # skew salting (north_rule)
-    robots: dict | None = None
-    minhash_perm: int = 64
-    broadcast_web: bool = True             # False when the fetch oracle is big
     collect_metrics: bool = True           # False skips optional count jobs
     compact_every: int = 0                 # >0: compact state tables every N epochs
     dedup_doc_ids: bool = True             # False when the fetcher can't redirect
                                            # (doc_id collisions impossible) —
                                            # skips one per-epoch probe job
-    # Where the per-domain (served, enqueued) dim lives:
-    #  * "driver" — two ints per active domain in driver dicts, snapshotted
-    #    to the watermarks table per epoch. O(domains) driver memory: right
-    #    for the north_rule target (uci.edu graph, ~10^2 hosts) and fine to
-    #    ~10^6 domains.
-    #  * "store"  — the watermarks TABLE is the only copy; the dequeue
-    #    broadcast reads it, seq offsets join it, and the advance is a
-    #    distributed merge (full outer join + compact) instead of dict
-    #    updates. Driver state is O(1); use for general web crawls with
-    #    10^7+ hosts. Requires ordering="relaxed".
-    watermark_dim: str = "driver"          # "driver" | "store"
     # Wall-clock politeness in the in-stage fetcher (real HTTP mode): each
     # fetch+parse task paces same-domain fetches to >= politeness_delay
-    # apart, and the dequeued batch is partitioned BY DOMAIN (not round-
-    # robin) so the per-partition guarantee is global. Off in oracle/bench
-    # mode, where politeness stays virtual (the epoch token budget) and the
-    # round-robin rebalance spreads the hot domain instead — with pacing on,
-    # a hot domain is serialized by definition, so domain-partitioning
-    # loses nothing.
+    # apart (or the domain's crawl_delays_df row), and the dequeued batch
+    # is partitioned BY DOMAIN (not round-robin) so the per-partition
+    # guarantee is global. Off in oracle/bench mode, where politeness stays
+    # virtual (the epoch token budget) and the round-robin rebalance
+    # spreads the hot domain instead — with pacing on, a hot domain is
+    # serialized by definition, so domain-partitioning loses nothing.
     wallclock_politeness: bool = False
-    # Per-domain robots.txt Crawl-delay overrides for the wall-clock pacer
-    # ({domain: seconds}, functions.robots.build_crawl_delays) — a declared
-    # delay wins over politeness_delay for that domain. Driver-sized like
-    # the robots dict; ignored unless wallclock_politeness is on.
-    crawl_delays: dict[str, float] | None = None
-    # HOST-SCALE form of the same override: a (domain, crawl_delay) dim
-    # DataFrame (functions.robots.build_crawl_delays_df), joined onto the
-    # dequeued batch by domain before the fetch stage — no driver dict at
-    # any host count, mirroring robots_rules_df vs the robots dict. Wins
-    # over crawl_delays when both are set; ignored unless
-    # wallclock_politeness is on and the fetcher runs in-stage.
-    crawl_delays_df: "DataFrame | None" = None
-
-
-_PHASE_DEBUG = os.environ.get("SPARK_GRAFT_PHASE_DEBUG") == "1"
-
-
-class _PhaseTimer:
-    """Opt-in per-phase wall clock (SPARK_GRAFT_PHASE_DEBUG=1)."""
-
-    def __init__(self) -> None:
-        self.t = time.monotonic()
-
-    def mark(self, label: str) -> None:
-        if _PHASE_DEBUG:
-            now = time.monotonic()
-            print(f"\nPHASE {label}: {now - self.t:.2f}s", flush=True)
-            self.t = now
-        else:
-            self.t = time.monotonic()
 
 
 class CrawlEngine:
@@ -227,6 +193,7 @@ class CrawlEngine:
         config: EngineConfig | None = None,
         fetcher=None,
         robots_df: DataFrame | None = None,
+        crawl_delays_df: DataFrame | None = None,
     ):
         """``web_df`` is the synthetic fetch-oracle table
         (url, status, final_url, content_type, payload, domain), joined
@@ -234,77 +201,45 @@ class CrawlEngine:
         payload, final_url)) fetches *inside* the fused mapInPandas stage —
         the shape real HTTP fetching takes on a cluster.
 
-        ``robots_df`` is the host-scale robots gate: a ``(host, rules)``
-        DataFrame from functions.robots.build_robots_rules_df, applied as
-        a distributed join on the epoch's candidate links instead of the
-        ``config.robots`` broadcast dict probed inside the parse stage.
-        Use for crawls with 10^7+ hosts, where O(hosts) rules must never
-        reach the driver — the same escape hatch watermark_dim="store"
-        gives the politeness dim. Relaxed ordering only; mutually
-        exclusive with ``config.robots``."""
+        ``robots_df`` is the robots gate: a ``(host, rules)`` DataFrame
+        from functions.robots.build_robots_rules_df, joined onto candidate
+        links (functions.robots.robots_gate_join) before the seen probe, in
+        both ordering modes. It judges the canonical URL the engine will
+        request. O(hosts) rules never reach the driver.
+
+        ``crawl_delays_df`` is the per-domain robots.txt ``Crawl-delay``
+        override for the wall-clock pacer: a ``(domain, crawl_delay)``
+        DataFrame from functions.robots.build_crawl_delays_df, joined onto
+        the dequeued batch by domain. A declared delay wins over
+        ``politeness_delay`` for its domain. Used only when
+        ``wallclock_politeness`` is on and ``fetcher`` is set."""
         self.spark = spark
         self.store = store
         self.web_df = web_df
         self.cfg = config or EngineConfig()
         self._robots_df = robots_df
-        if robots_df is not None:
-            if self.cfg.robots:
-                raise ValueError(
-                    "pass either config.robots (broadcast dict) or "
-                    "robots_df (join dim), not both"
-                )
-            if self.cfg.ordering != "relaxed":
-                raise ValueError(
-                    "robots_df requires ordering='relaxed' (the exact "
-                    "parity mode gates links inside its driver loop)"
-                )
-        if self.cfg.watermark_dim not in ("driver", "store"):
-            raise ValueError(
-                f"watermark_dim must be 'driver' or 'store', "
-                f"got {self.cfg.watermark_dim!r}"
-            )
-        if self.cfg.watermark_dim == "store" and self.cfg.ordering == "exact":
-            raise ValueError(
-                "watermark_dim='store' requires ordering='relaxed' (the "
-                "exact parity mode is inherently driver-coordinated)"
-            )
+        self._in_stage_fetch = fetcher is not None
+        pace = self.cfg.wallclock_politeness and self._in_stage_fetch
+        self._crawl_delays_df = crawl_delays_df if pace else None
         self._parse_stage = make_parse_stage(
-            robots=self.cfg.robots,
-            minhash_perm=self.cfg.minhash_perm,
             fetcher=fetcher,
             compute_sketches=self.cfg.neardup != "off",
-            politeness_delay=(
-                self.cfg.politeness_delay
-                if self.cfg.wallclock_politeness else 0.0
-            ),
-            domain_delays=(
-                self.cfg.crawl_delays
-                if self.cfg.wallclock_politeness else None
-            ),
+            politeness_delay=self.cfg.politeness_delay if pace else 0.0,
             delay_col=(
-                "crawl_delay"
-                if self.cfg.wallclock_politeness
-                and self.cfg.crawl_delays_df is not None
-                and fetcher is not None
-                else None
+                "crawl_delay" if self._crawl_delays_df is not None else None
             ),
         )
-        self._in_stage_fetch = fetcher is not None
         # in-memory mirrors rebuilt from snapshots on resume
         self._round = 0
         self._fps_index: list[tuple[str, frozenset]] = []  # exact near-dup
         self._saved_doc_ids: set[str] = set()
         self._checksums: set[str] = set()
         self._bloom: BloomFilter | None = None
-        # relaxed-mode per-domain served watermarks and enqueue counters
-        # (the last assigned frontier seq). watermark_dim="driver": held
-        # here (one int per domain each), snapshotted to the watermarks
-        # table per epoch. watermark_dim="store": BOTH STAY EMPTY — the
-        # watermarks table is the only copy, advanced by a distributed
-        # merge (the 10^7+-domain path; see EngineConfig).
-        self._watermarks: dict[str, int] = {}
+        # exact mode's per-domain enqueue counter (the last assigned
+        # frontier seq); relaxed mode keeps it EMPTY — its counters live
+        # only in the watermarks table
         self._next_seq: dict[str, int] = {}
-        # O(1) stand-in for max(served) in store mode: exact at resume,
+        # O(1) stand-in for max(served) in relaxed mode: exact at resume,
         # advanced by +tokens per epoch (a monotone upper bound — served
         # can grow by at most tokens per domain per epoch). Only used to
         # derive the dequeue's scan-pruning literal, where any upper bound
@@ -320,16 +255,6 @@ class CrawlEngine:
         if comp is not None:
             row = comp.agg(F.max("round").alias("m")).collect()[0]
             self._round = int(row.m) + 1 if row.m is not None else 0
-        if self.cfg.watermark_dim == "driver":
-            wm = self.store.read_or_none("watermarks")
-            if wm is not None:
-                wm_rows = wm.collect()
-                self._watermarks = {r.domain: int(r.served) for r in wm_rows}
-                if "enqueued" in wm.columns:
-                    self._next_seq = {
-                        r.domain: int(r.enqueued)
-                        for r in wm_rows if r.enqueued is not None
-                    }
         frontier = self.store.read_or_none("frontier")
         if frontier is not None and "seq" not in frontier.columns:
             # legacy (pre-seq) store: one-time migration assigning each row
@@ -344,24 +269,25 @@ class CrawlEngine:
                 sort_by=["seq"],
             )
             frontier = self.store.read("frontier")
-        # ALWAYS max-merge the persisted enqueue counters with the
-        # frontier's actual per-domain max(seq). The epoch loop commits
-        # the frontier append (new seq values) BEFORE the watermark
-        # snapshot persists the counters, so a crash in that window
-        # leaves the snapshot stale; trusting it alone would reassign
-        # duplicate seq numbers (two rows sharing a politeness slot,
-        # later rows silently skipped by the served watermark). The
-        # merge also covers externally seeded stores (bench) and
-        # exact-mode history, where no snapshot exists at all.
-        if self.cfg.watermark_dim == "store":
-            self._sync_watermarks_store(frontier)
-        elif frontier is not None:
-            for r in (
-                frontier.groupBy("domain").agg(F.max("seq").alias("m")).collect()
-            ):
-                self._next_seq[r.domain] = max(
-                    self._next_seq.get(r.domain, 0), int(r.m)
-                )
+        # ALWAYS lift the enqueue counters to the frontier's actual
+        # per-domain max(seq): exact mode rebuilds its dict from it,
+        # relaxed mode max-merges it into the watermarks table. The epoch
+        # loop commits the frontier append (new seq values) BEFORE the
+        # watermark merge persists the counters, so a crash in that window
+        # leaves the table stale; trusting it alone would reassign
+        # duplicate seq numbers (two rows sharing a politeness slot, later
+        # rows silently skipped by the served watermark). This also covers
+        # externally seeded stores (bench), where no watermarks table
+        # exists at all.
+        if self.cfg.ordering == "exact":
+            if frontier is not None:
+                self._next_seq = {
+                    r.domain: int(r.m)
+                    for r in frontier.groupBy("domain")
+                    .agg(F.max("seq").alias("m")).collect()
+                }
+        else:
+            self._sync_watermarks(frontier)
         if self.cfg.neardup != "off" and self.store is not None:
             # sketch-scheme guard (see fingerprint.SKETCH_SCHEME): signatures
             # persisted under a different hash scheme are silently
@@ -445,76 +371,67 @@ class CrawlEngine:
                 self._bloom = BloomFilter.sized_for(1 << 16)
 
     @staticmethod
-    def _merged_watermark_dim(
+    def _merged_watermarks(
         wm: DataFrame | None,
         adds: DataFrame | None = None,
         enq: DataFrame | None = None,
     ) -> DataFrame:
-        """THE watermark advance, in one place (it used to exist in three
-        near-identical copies — resume sync, seeding, epoch commit):
-        full-outer-merge the old dim with optional served increments
+        """THE watermark advance, in one place (resume sync, seeding,
+        epoch commit): merge the old dim with optional served increments
         ``(domain, _add)`` and enqueue maxima ``(domain, _dmax)``;
-        served' = served + _add, enqueued' = max(enqueued, _dmax). Any
-        input may be None; at least one must not be."""
-        merged = None
-        for d in (wm, adds, enq):
-            if d is not None:
-                merged = (
-                    d if merged is None
-                    else merged.join(d, "domain", "full_outer")
-                )
-        cols = set(merged.columns)
-
-        def _c(name):
-            return (
-                F.coalesce(F.col(name), F.lit(0)) if name in cols else F.lit(0)
+        served' = served + _add, enqueued' = max(enqueued, _dmax). One
+        union + per-domain aggregation (a single shuffle with map-side
+        combine). Any input may be None; at least one must not be."""
+        zero = F.lit(0).cast("bigint")
+        parts = []
+        if wm is not None:
+            # a legacy (pre-seq) table carries served only
+            enqueued = F.col("enqueued") if "enqueued" in wm.columns else zero
+            parts.append(
+                wm.select("domain", "served", enqueued.alias("enqueued"))
             )
-
-        return merged.select(
-            "domain",
-            (_c("served") + _c("_add")).cast("bigint").alias("served"),
-            F.greatest(_c("enqueued"), _c("_dmax")).cast("bigint")
+        if adds is not None:
+            parts.append(adds.select(
+                "domain", F.col("_add").alias("served"), zero.alias("enqueued")
+            ))
+        if enq is not None:
+            parts.append(enq.select(
+                "domain", zero.alias("served"), F.col("_dmax").alias("enqueued")
+            ))
+        merged = parts[0]
+        for part in parts[1:]:
+            merged = merged.unionByName(part)
+        return merged.groupBy("domain").agg(
+            F.coalesce(F.sum("served"), zero).cast("bigint").alias("served"),
+            F.coalesce(F.max("enqueued"), zero).cast("bigint")
             .alias("enqueued"),
         )
 
-    def _sync_watermarks_store(self, frontier: DataFrame | None) -> None:
-        """Store-mode resume: the same crash-window repair as the driver
-        path, done distributively — enqueued := max(enqueued, per-domain
-        max(seq) over the frontier) via a full outer join + compact — so
-        the driver never materializes the domain dim. Also initializes the
-        O(1) served upper bound used for dequeue scan pruning."""
+    def _sync_watermarks(self, frontier: DataFrame | None) -> None:
+        """Relaxed-mode resume: the crash-window repair done distributively
+        — enqueued := max(enqueued, per-domain max(seq) over the frontier)
+        via one merge + compact — so the driver never materializes the
+        domain dim. Also initializes the O(1) served upper bound used for
+        dequeue scan pruning (the repair leaves served untouched)."""
         wm = self.store.read_or_none("watermarks")
-        if frontier is not None:
-            fmax = frontier.groupBy("domain").agg(F.max("seq").alias("_dmax"))
-            self.store.compact(
-                "watermarks", self._merged_watermark_dim(wm, enq=fmax)
-            )
-            wm = self.store.read("watermarks")
         if wm is not None:
             row = wm.agg(F.max("served").alias("m")).collect()[0]
             self._max_served_bound = int(row.m or 0)
+        if frontier is not None:
+            fmax = frontier.groupBy("domain").agg(F.max("seq").alias("_dmax"))
+            self.store.compact(
+                "watermarks", self._merged_watermarks(wm, enq=fmax)
+            )
 
-    def _served_dim(self) -> DataFrame | None:
-        """The (domain, served) dequeue dim from whichever home the
-        watermarks live in."""
-        if self.cfg.watermark_dim == "store":
-            wm = self.store.read_or_none("watermarks")
-            return wm.select("domain", "served") if wm is not None else None
-        if not self._watermarks:
-            return None
-        return self.spark.createDataFrame(
-            list(self._watermarks.items()), _WM_BROADCAST_SCHEMA
-        )
-
-    def _merge_enqueued_store(self, maxima: dict[str, int]) -> None:
+    def _merge_enqueued(self, maxima: dict[str, int]) -> None:
         """Fold a small {domain: max assigned seq} map (seeding) into the
-        store-mode watermark table."""
+        watermarks table."""
         inc = self.spark.createDataFrame(
             list(maxima.items()), "domain string, _dmax bigint"
         )
         wm = self.store.read_or_none("watermarks")
         self.store.compact(
-            "watermarks", self._merged_watermark_dim(wm, enq=inc)
+            "watermarks", self._merged_watermarks(wm, enq=inc)
         )
 
     def seed(self, urls: list[str]) -> None:
@@ -543,7 +460,8 @@ class CrawlEngine:
                 ).collect()
             }
             pre = [t for t in pre if t[0] in fresh]
-        if self.cfg.watermark_dim == "store":
+        relaxed = self.cfg.ordering == "relaxed"
+        if relaxed:
             # counters for the seeded domains only (seeds are O(10^0..10^2)
             # rows; the full dim never comes to the driver)
             counters: dict[str, int] = {}
@@ -569,14 +487,14 @@ class CrawlEngine:
             "frontier", [dict(zip(names, r)) for r in rows],
             ARROW_SCHEMAS["frontier"],
         )
-        if self.cfg.watermark_dim == "store" and rows:
+        if relaxed and rows:
             # counters commit AFTER the frontier rows — the same crash
             # order the epoch loop keeps (see _resume's max-merge): a
             # crash in between leaves a stale snapshot that the resume
             # repairs from frontier max(seq). The inverted order would
             # persist phantom enqueued values for rows that never landed,
             # an unrepairable seq gap that stalls the domain forever.
-            self._merge_enqueued_store(
+            self._merge_enqueued(
                 {dom: counters[dom] for dom in {r[2] for r in rows}}
             )
         self.store.append_rows(
@@ -586,7 +504,7 @@ class CrawlEngine:
             self._bloom.add_many(r[0] for r in rows)
 
     def _salt_of(self, url: str) -> int:
-        return hash(url) % self.cfg.salt_buckets
+        return hash(url) % SALT_BUCKETS
 
     def _pending_df(self) -> DataFrame:
         frontier = self.store.read("frontier")
@@ -607,27 +525,29 @@ class CrawlEngine:
             cols.insert(1, "url_hash")
         slim = dequeued.select(*cols)
         if self._in_stage_fetch:
-            if (
-                self.cfg.wallclock_politeness
-                and self.cfg.crawl_delays_df is not None
-            ):
+            if self._crawl_delays_df is not None:
                 # per-domain Crawl-delay rides the batch as a column; the
                 # dequeue already partitioned by domain, and the dim is
                 # domain-keyed, so the join co-locates without a new
                 # shuffle shape (AQE broadcasts it at sane dim sizes)
                 slim = slim.join(
-                    self.cfg.crawl_delays_df.select("domain", "crawl_delay"),
+                    self._crawl_delays_df.select("domain", "crawl_delay"),
                     "domain",
                     "left",
                 )
             return slim.mapInPandas(self._parse_stage, schema=PARSED_SCHEMA)
-        web = self.web_df.select(
+        web = F.broadcast(self.web_df.select(
             "url", "status", "final_url", "content_type", "payload"
-        )
-        if self.cfg.broadcast_web:
-            web = F.broadcast(web)
+        ))
         joined = slim.join(web, "url", "left")
         return joined.mapInPandas(self._parse_stage, schema=PARSED_SCHEMA)
+
+    def _robots_gate(self, links: DataFrame) -> DataFrame:
+        """Keep the robots-allowed rows of ``links`` (a ``url`` column of
+        canonical URLs); identity when no rules dim was given."""
+        if self._robots_df is None:
+            return links
+        return robots_gate_join(links, self._robots_df, url_col="url")
 
     def _append_round_outputs(
         self,
@@ -735,11 +655,12 @@ class CrawlEngine:
             return False
 
         fetched: dict[str, object] = {}   # domain -> parsed Row
-        new_hash_flags: dict[str, bool] = {}  # url_hash -> absent-from-frontier?
+        new_hash_flags: dict[str, bool] = {}  # url_hash -> enqueue it?
 
         def fetch_wave(entries: list[tuple]) -> None:
             """entries: (url, url_hash, domain). Runs the Spark fetch+parse
-            stage and records which candidate hashes are new vs frontier."""
+            stage and records which candidate hashes are new: robots-
+            allowed and absent from the seen set."""
             df = self.spark.createDataFrame(
                 [(u, h, d, 1, round_no, "", 0) for (u, h, d) in entries],
                 "url string, url_hash string, domain string, slot int, "
@@ -747,26 +668,25 @@ class CrawlEngine:
             )
             parsed = self._fetch_and_parse(df)
             rows = parsed.collect()
-            cand_hashes = sorted(
+            cands = sorted(
                 {
-                    link.url_hash
+                    (link.url_hash, link.url)
                     for r in rows
                     for link in (r.outlinks or [])
                     if link.url_hash not in new_hash_flags
                 }
             )
-            if cand_hashes:
-                cand_df = self.spark.createDataFrame(
-                    [(h,) for h in cand_hashes], "url_hash string"
-                )
-                frontier_hashes = self.store.read("seen")
+            if cands:
+                cand_df = self._robots_gate(self.spark.createDataFrame(
+                    cands, "url_hash string, url string"
+                ))
                 fresh = {
                     r.url_hash
                     for r in cand_df.join(
-                        frontier_hashes, "url_hash", "left_anti"
+                        self.store.read("seen"), "url_hash", "left_anti"
                     ).collect()
                 }
-                for h in cand_hashes:
+                for h, _ in cands:
                     new_hash_flags[h] = h in fresh
             for r in rows:
                 fetched[r.domain] = r
@@ -829,26 +749,23 @@ class CrawlEngine:
     # ------------------------------------------------------------------
     def _run_relaxed_epoch(self) -> bool:
         t0 = time.monotonic()
-        pt = _PhaseTimer()
         base = self._round
         tokens = self.cfg.rounds_per_epoch
-        store_dim = self.cfg.watermark_dim == "store"
-        wm_df = self._served_dim()
+        # the epoch's one snapshot of the watermarks table: the dequeue
+        # probes its served column, seq offsets join its enqueued column
+        # and the closing merge advances it
+        wm = self.store.read_or_none("watermarks")
         # every domain's window ends at served_d + tokens <= global max
         # served + tokens: a literal bound the scan can prune row groups
         # with (frontier deltas/bases are written seq-sorted — see the
-        # store.append sort_by below and plans/dequeue.py). Store mode
-        # tracks the max as an O(1) monotone upper bound instead of
-        # scanning the dim.
-        if store_dim:
-            max_bound = self._max_served_bound + tokens
-        else:
-            max_bound = (
-                max(self._watermarks.values()) if self._watermarks else 0
-            ) + tokens
+        # store.append sort_by below and plans/dequeue.py). The max is
+        # tracked as an O(1) monotone upper bound instead of scanning the
+        # dim.
         dequeued = politeness_heads_indexed(
-            self.store.read("frontier"), wm_df, tokens,
-            max_seq_bound=max_bound,
+            self.store.read("frontier"),
+            wm.select("domain", "served") if wm is not None else None,
+            tokens,
+            max_seq_bound=self._max_served_bound + tokens,
         )
         # the filter-only dequeue preserves the frontier's file layout —
         # without a rebalance the hot domain's slice would ride into ONE
@@ -866,28 +783,17 @@ class CrawlEngine:
         parsed = self._fetch_and_parse(dequeued)
         parsed.persist()
         # one job materializes the fetch+parse AND yields the per-domain
-        # served counts for the watermark advance. Driver mode collects
-        # them (O(active domains)); store mode keeps them as a persisted
-        # DataFrame and collects only the global pop count.
-        adds_df = None
-        if store_dim:
-            adds_df = parsed.groupBy("domain").agg(
-                F.count("*").alias("_add")
-            ).persist()
-            pops = int(
-                adds_df.agg(F.coalesce(F.sum("_add"), F.lit(0))).collect()[0][0]
-            )
-            domain_counts = None
-        else:
-            domain_counts = parsed.groupBy("domain").agg(
-                F.count("*").alias("_add")
-            ).collect()
-            pops = sum(r._add for r in domain_counts)
-        pt.mark("dequeue+fetch+parse")
+        # served counts for the watermark advance, kept as a persisted
+        # DataFrame; only the global pop count comes to the driver
+        adds_df = parsed.groupBy("domain").agg(
+            F.count("*").alias("_add")
+        ).persist()
+        pops = int(
+            adds_df.agg(F.coalesce(F.sum("_add"), F.lit(0))).collect()[0][0]
+        )
         if pops == 0:
             parsed.unpersist()
-            if adds_df is not None:
-                adds_df.unpersist()
+            adds_df.unpersist()
             return False
 
         # candidate links in deterministic discovery order
@@ -925,14 +831,10 @@ class CrawlEngine:
             )
             .select("url_hash", "_w.*")
         )
-        if self._robots_df is not None:
-            # host-scale robots gate: filter AFTER first-occurrence dedup
-            # (one evaluation per distinct URL, not per discovery) and
-            # BEFORE the seen probe. Identical final frontier to the
-            # in-parse dict gate — the gate is a per-URL pure predicate.
-            from ..functions.robots import robots_gate_join
-
-            firsts = robots_gate_join(firsts, self._robots_df, url_col="url")
+        # robots gate AFTER first-occurrence dedup (one evaluation per
+        # distinct URL, not per discovery) and BEFORE the seen probe: the
+        # gate is a per-URL pure predicate, so the result is the same
+        firsts = self._robots_gate(firsts)
         frontier_hashes = self.store.read("seen")
         flagged = None
         if self._bloom is not None:
@@ -961,7 +863,7 @@ class CrawlEngine:
 
         new_rows = new_links.select(
             "url_hash", "url", "domain",
-            F.pmod(F.xxhash64("url"), F.lit(self.cfg.salt_buckets))
+            F.pmod(F.xxhash64("url"), F.lit(SALT_BUCKETS))
             .cast("int").alias("salt"),
             "parent",
             (F.lit(base) + F.col("slot") - 1).cast("long").alias("rk_round"),
@@ -976,30 +878,18 @@ class CrawlEngine:
         # sorts after every previously inserted row of its domain.
         order = [F.col(c).asc() for c in DISCOVERY_ORDER]
         w_batch = Window.partitionBy("domain").orderBy(*order)
-        if store_dim:
-            # the enqueue counters come from the watermark table read at
-            # epoch start (wm requires the full schema; _served_dim
-            # projected it). No broadcast hint: at 10^7+ domains AQE picks
-            # the join side, and the new-rows batch is the small side.
-            wm_full = self.store.read_or_none("watermarks")
-            offsets = (
-                wm_full.select("domain", F.col("enqueued").alias("base_seq"))
-                if wm_full is not None
-                else self.spark.createDataFrame(
-                    [("", 0)], "domain string, base_seq bigint"
-                )
+        new_rows = new_rows.withColumn("_brn", F.row_number().over(w_batch))
+        if wm is not None:
+            # no broadcast hint: at 10^7+ domains AQE picks the join side,
+            # and the new-rows batch is the small side
+            new_rows = new_rows.join(
+                wm.select("domain", F.col("enqueued").alias("base_seq")),
+                "domain", "left",
             )
-            offsets_hinted = offsets
         else:
-            offsets = self.spark.createDataFrame(
-                list(self._next_seq.items()) or [("", 0)],
-                "domain string, base_seq bigint",
-            )
-            offsets_hinted = F.broadcast(offsets)
+            new_rows = new_rows.withColumn("base_seq", F.lit(0))
         new_rows = (
-            new_rows.withColumn("_brn", F.row_number().over(w_batch))
-            .join(offsets_hinted, "domain", "left")
-            .withColumn(
+            new_rows.withColumn(
                 "seq",
                 (F.coalesce(F.col("base_seq"), F.lit(0)) + F.col("_brn"))
                 .cast("bigint"),
@@ -1011,25 +901,16 @@ class CrawlEngine:
         # seq-sorted delta: keeps row-group min/max stats on seq tight so
         # the dequeue's max_seq_bound conjunct prunes at the parquet scan
         self.store.append("frontier", new_rows, sort_by=["seq"])
-        pt.mark("candidates+frontier-merge")
         # the committed delta read-back is the cheap source for the seen
         # append, the bloom increment, AND the enqueue-counter advance
         # (avoids recomputing the candidate pipeline)
         delta = self.store.read_last_delta("frontier")
-        if not store_dim:
-            for r in (
-                delta.groupBy("domain").agg(F.max("seq").alias("m")).collect()
-            ):
-                self._next_seq[r.domain] = max(
-                    self._next_seq.get(r.domain, 0), int(r.m)
-                )
         self.store.append("seen", delta.select("url_hash"))
         if self._bloom is not None:
             inc = BloomFilter.build_from_df_with_shape(
                 delta, "url_hash", self._bloom.n_bits, self._bloom.k
             )
             self._bloom.merge_inplace(inc)
-        pt.mark("seen+bloom")
 
         self.store.append(
             "completions",
@@ -1079,11 +960,9 @@ class CrawlEngine:
             "doc_id", "domain", F.col("ord_round").alias("round"),
             "word_count", "spans",
         )
-        pt.mark("completions+docdedup-plan")
         collect = self.cfg.collect_metrics
         n_saved = saved_df.count() if collect else -1
         self.store.append("documents", saved_df)
-        pt.mark("documents")
         if self.cfg.neardup != "off":
             self.store.append(
                 "fingerprints",
@@ -1096,7 +975,6 @@ class CrawlEngine:
                 "url", "url_hash", "domain", "gate", "checksum", "doc_id",
             ),
         )
-        pt.mark("fetch_log")
         stats = {
             "pops": pops,
             "parsed_ok": ok.count() if collect else -1,
@@ -1111,41 +989,16 @@ class CrawlEngine:
         # the epoch leaves the persisted snapshot untouched, so resume
         # replays the whole epoch (at-least-once fetch; frontier/documents
         # appends stay deduplicated by the seen anti-join and the prior-docs
-        # anti-join).
-        if store_dim:
-            # distributed merge: old dim FULL OUTER served-adds FULL OUTER
-            # this epoch's enqueue maxima, compacted as the new snapshot.
-            # O(domains) stays on the executors; the driver advances only
-            # its O(1) served upper bound.
-            wm_old = self.store.read_or_none("watermarks")
-            delta_max = delta.groupBy("domain").agg(
-                F.max("seq").alias("_dmax")
-            )
-            self.store.compact(
-                "watermarks",
-                self._merged_watermark_dim(wm_old, adds_df, delta_max),
-            )
-            self._max_served_bound += tokens
-            adds_df.unpersist()
-        else:
-            # driver dicts + a pyarrow snapshot commit — no extra Spark jobs
-            for r in domain_counts:
-                self._watermarks[r.domain] = (
-                    self._watermarks.get(r.domain, 0) + int(r._add)
-                )
-            self.store.overwrite_rows(
-                "watermarks",
-                [
-                    {
-                        "domain": d,
-                        "served": self._watermarks.get(d, 0),
-                        "enqueued": self._next_seq.get(d, 0),
-                    }
-                    for d in set(self._watermarks) | set(self._next_seq)
-                ],
-                ARROW_SCHEMAS["watermarks"],
-            )
-
+        # anti-join). Distributed merge of the old dim, the served-adds and
+        # this epoch's enqueue maxima, compacted as the new snapshot.
+        # O(domains) stays on the executors; the driver advances only its
+        # O(1) served upper bound.
+        delta_max = delta.groupBy("domain").agg(F.max("seq").alias("_dmax"))
+        self.store.compact(
+            "watermarks", self._merged_watermarks(wm, adds_df, delta_max)
+        )
+        self._max_served_bound += tokens
+        adds_df.unpersist()
         parsed.unpersist()
         if flagged is not None:
             flagged.unpersist()
@@ -1289,13 +1142,13 @@ class CrawlEngine:
         ordering constraint entirely)."""
         if not self.store.exists("frontier"):
             return
-        wm = self._served_dim()
+        wm = self.store.read_or_none("watermarks")
         if wm is None:
             self.store.compact("frontier")
             return
         frontier = self.store.read("frontier")
         remaining = (
-            frontier.join(wm, "domain", "left")
+            frontier.join(wm.select("domain", "served"), "domain", "left")
             .where(F.col("seq") > F.coalesce(F.col("served"), F.lit(0)))
             .drop("served")
         )

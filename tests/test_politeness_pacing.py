@@ -10,6 +10,8 @@ serial time for its longest domain queue."""
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 import pytest
 
@@ -33,21 +35,25 @@ class FakeClock:
         self.t += s
 
 
-def _mk_rows(urls_by_domain: dict[str, int]):
+def _mk_rows(urls_by_domain: dict[str, int], delays=None):
+    """Dequeued rows; with ``delays`` ({domain: seconds}) each row also
+    carries the ``crawl_delay`` column the engine joins in (NaN, as pandas
+    renders NULL, for an undeclared domain)."""
     rows = []
     for dom, n in urls_by_domain.items():
         for slot in range(1, n + 1):
-            rows.append(
-                {
-                    "url": f"https://{dom}/p{slot}",
-                    "url_hash": f"h-{dom}-{slot}",
-                    "domain": dom,
-                    "slot": slot,
-                    "rk_round": 0,
-                    "rk_pop": "",
-                    "rk_pos": 0,
-                }
-            )
+            row = {
+                "url": f"https://{dom}/p{slot}",
+                "url_hash": f"h-{dom}-{slot}",
+                "domain": dom,
+                "slot": slot,
+                "rk_round": 0,
+                "rk_pop": "",
+                "rk_pos": 0,
+            }
+            if delays is not None:
+                row["crawl_delay"] = delays.get(dom, math.nan)
+            rows.append(row)
     return rows
 
 
@@ -183,9 +189,11 @@ def test_engine_wallclock_mode_paces_and_crawls(spark, tmp_path):
 
 
 def test_crawl_delay_overrides_per_domain():
-    """robots.txt Crawl-delay per-domain overrides: a domain with a
-    declared delay paces at THAT interval (either direction vs the
-    config default); undeclared domains keep the default."""
+    """robots.txt Crawl-delay per-domain overrides, carried as the
+    ``crawl_delay`` column (joined in from build_crawl_delays_df): a
+    domain with a declared delay paces at THAT interval (either direction
+    vs the config default); undeclared (NULL/NaN) domains keep the
+    default."""
     clock, log = FakeClock(), []
 
     def fetcher(url):
@@ -194,10 +202,12 @@ def test_crawl_delay_overrides_per_domain():
 
     stage = make_parse_stage(
         fetcher=fetcher, compute_sketches=False,
-        politeness_delay=DELAY, clock=clock,
-        domain_delays={"slow.uci.edu": 2.0, "fast.uci.edu": 0.1},
+        politeness_delay=DELAY, delay_col="crawl_delay", clock=clock,
     )
-    rows = _mk_rows({"slow.uci.edu": 3, "fast.uci.edu": 3, "plain.uci.edu": 3})
+    rows = _mk_rows(
+        {"slow.uci.edu": 3, "fast.uci.edu": 3, "plain.uci.edu": 3},
+        delays={"slow.uci.edu": 2.0, "fast.uci.edu": 0.1},
+    )
     for out in stage(iter([pd.DataFrame(rows)])):
         assert (out["gate"] == "ok").all()
     times = _domain_times(log)
@@ -210,52 +220,6 @@ def test_crawl_delay_overrides_per_domain():
     # slow domain's 2 gaps x 2.0s — not the sum of every domain's waits
     # (other domains ride inside the slow domain's idle windows)
     assert clock.t == pytest.approx(4.0)
-
-
-def test_delay_column_overrides_config_default():
-    """Host-scale Crawl-delay path: the per-row ``crawl_delay`` column
-    (joined in from build_crawl_delays_df) paces its domain; NULL/NaN
-    rows fall back to the config default — same semantics as the
-    domain_delays dict, with no driver state."""
-    import math
-
-    clock, log = FakeClock(), []
-
-    def fetcher(url):
-        log.append((url, clock.monotonic()))
-        return (200, "text/html", PAGE, url)
-
-    stage = make_parse_stage(
-        fetcher=fetcher, compute_sketches=False,
-        politeness_delay=DELAY, delay_col="crawl_delay", clock=clock,
-    )
-    rows = []
-    for dom, n, dly in (
-        ("slow.uci.edu", 3, 2.0),        # declared: 2s beats the 0.5 default
-        ("fast.uci.edu", 3, 0.1),        # declared: 0.1s beats it down
-        ("plain.uci.edu", 3, math.nan),  # undeclared -> default 0.5
-    ):
-        for slot in range(1, n + 1):
-            rows.append(
-                {
-                    "url": f"https://{dom}/p{slot}",
-                    "url_hash": f"h-{dom}-{slot}",
-                    "domain": dom,
-                    "slot": slot,
-                    "rk_round": 0,
-                    "rk_pop": "",
-                    "rk_pos": 0,
-                    "crawl_delay": dly,
-                }
-            )
-    for out in stage(iter([pd.DataFrame(rows)])):
-        assert (out["gate"] == "ok").all()
-    times = _domain_times(log)
-    for dom, dly in (
-        ("slow.uci.edu", 2.0), ("fast.uci.edu", 0.1), ("plain.uci.edu", DELAY)
-    ):
-        gaps = [b - a for a, b in zip(times[dom], times[dom][1:])]
-        assert all(g >= dly - 1e-9 for g in gaps), (dom, gaps)
 
 
 def test_delay_column_below_default_speeds_up_its_domain():
@@ -272,19 +236,7 @@ def test_delay_column_below_default_speeds_up_its_domain():
         fetcher=fetcher, compute_sketches=False,
         politeness_delay=DELAY, delay_col="crawl_delay", clock=clock,
     )
-    rows = [
-        {
-            "url": f"https://fast.uci.edu/p{slot}",
-            "url_hash": f"h-fast-{slot}",
-            "domain": "fast.uci.edu",
-            "slot": slot,
-            "rk_round": 0,
-            "rk_pop": "",
-            "rk_pos": 0,
-            "crawl_delay": 0.1,
-        }
-        for slot in (1, 2, 3)
-    ]
+    rows = _mk_rows({"fast.uci.edu": 3}, delays={"fast.uci.edu": 0.1})
     for out in stage(iter([pd.DataFrame(rows)])):
         assert (out["gate"] == "ok").all()
     assert abs(sum(clock.sleeps) - 0.2) < 1e-9, clock.sleeps
@@ -294,8 +246,8 @@ def test_delay_column_below_default_speeds_up_its_domain():
 
 
 def test_engine_crawl_delays_df_reaches_the_fetch_stage(spark, tmp_path):
-    """Engine-level wiring for the HOST-SCALE delay dim: with
-    EngineConfig.crawl_delays_df set, the (domain, crawl_delay) column
+    """Engine-level wiring for the delay dim: with CrawlEngine's
+    crawl_delays_df set, the (domain, crawl_delay) column
     joins onto the dequeued batch and the in-stage pacer honors it — a
     declared 0.8s delay must dominate the 0.05s config default, so the
     epoch wall time proves the column actually arrived (no driver dict
@@ -330,9 +282,9 @@ def test_engine_crawl_delays_df_reaches_the_fetch_stage(spark, tmp_path):
         EngineConfig(
             ordering="relaxed", neardup="off", rounds_per_epoch=n + 1,
             politeness_delay=0.05, wallclock_politeness=True,
-            crawl_delays_df=delays_df,
         ),
         fetcher=fetcher,
+        crawl_delays_df=delays_df,
     )
     eng.seed([f"https://{host}"])
     t0 = time.monotonic()

@@ -138,7 +138,7 @@ def test_relaxed_compaction_resume(spark, web, web_df, tmp_path):
 
 def test_resume_with_stale_watermark_snapshot(spark, web, web_df, tmp_path):
     """Crash window between the frontier append (commits new seq values)
-    and the watermark overwrite (persists the enqueued counters): a resume
+    and the watermark merge (persists the enqueued counters): a resume
     must max-merge the stale snapshot with the frontier's actual per-domain
     max(seq) — otherwise duplicate seq numbers get assigned and the served
     watermark silently skips rows (ADVICE r2, medium).
@@ -174,16 +174,21 @@ def test_resume_with_stale_watermark_snapshot(spark, web, web_df, tmp_path):
     )
 
     eng_b2 = CrawlEngine(spark, store_b, web_df, EngineConfig(**cfg))
-    # the rebuilt counters must reflect the frontier, not the stale snapshot
+    # the resume merge must have lifted the persisted enqueue counters to
+    # the frontier's reality, not kept the stale snapshot
     from pyspark.sql import functions as F
 
+    enqueued = {
+        r.domain: int(r.enqueued)
+        for r in store_b.read("watermarks").collect()
+    }
     actual_max = {
         r.domain: int(r.m)
         for r in store_b.read("frontier")
         .groupBy("domain").agg(F.max("seq").alias("m")).collect()
     }
     for dom, m in actual_max.items():
-        assert eng_b2._next_seq.get(dom, 0) >= m, (dom, m, eng_b2._next_seq)
+        assert enqueued.get(dom, 0) >= m, (dom, m, enqueued.get(dom))
     eng_b2.run()
 
     # no domain ever carries a duplicated politeness slot

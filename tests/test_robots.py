@@ -9,7 +9,8 @@ Three layers of evidence:
 2. Pinned RFC 9309 §2.2.2-style cases covering exactly the divergences:
    longest-match independence from line order, Allow-wins-ties, ``*``
    and ``$`` wildcards, and empty-Disallow handling.
-3. The DataFrame rules builder + the engine's link gate end to end.
+3. The DataFrame rules builder + the engine's link gate end to end, in
+   both ordering modes, against the oracle crawler's dict gate.
 """
 
 from __future__ import annotations
@@ -196,56 +197,106 @@ def test_legacy_bare_prefix_rules_still_gate():
 # DataFrame builder + engine e2e
 # ---------------------------------------------------------------------------
 
-def test_engine_gates_links_with_fetched_robots(spark, tmp_path):
-    """Full flow: /robots.txt payloads come out of the fetch oracle, the
-    DataFrame builder parses them into the rules dict, and the crawl's
-    link gate keeps disallowed paths out of the frontier/seen set while
-    honoring the more specific Allow carve-out."""
+WEB_DDL = (
+    "url string, status int, final_url string, content_type string, "
+    "payload binary, domain string"
+)
+SUB_PAGE = b"<html><body>about page " + b"filler " * 25 + b"</body></html>"
+
+
+def _site(host: str, robots_txt: bytes, hrefs: list[str]):
+    """A one-host web: a root page linking ``hrefs`` (each served, under
+    its canonical URL, as a plain page) and the host's robots.txt."""
+    from spacetime_crawler4py_spark.functions import urlkit
+    from spacetime_crawler4py_spark.sources.webgen import PageSpec, SyntheticWeb
+
+    root = f"https://{host}"  # engine-normalized form: no trailing slash
+    body = (
+        b"<html><body>"
+        + b" ".join(f'<a href="{h}">x</a>'.encode() for h in hrefs)
+        + b" twenty words of body text follow: " + b"word " * 20
+        + b"</body></html>"
+    )
+    pages = {
+        root: PageSpec(url=root, payload=body),
+        f"{root}/robots.txt": PageSpec(
+            url=f"{root}/robots.txt", content_type="text/plain",
+            payload=robots_txt,
+        ),
+    }
+    for h in hrefs:
+        url = urlkit.normalize(root + h)
+        pages[url] = PageSpec(url=url, payload=SUB_PAGE)
+    return SyntheticWeb(pages, seeds=[root])
+
+
+def _web_frames(spark, web):
+    """(fetch-oracle table, its /robots.txt rows as (host, payload))."""
     from pyspark.sql import functions as F
 
+    web_df = spark.createDataFrame(web.to_rows(), WEB_DDL)
+    robots_pages = web_df.where(F.col("url").endswith("/robots.txt")).select(
+        F.col("domain").alias("host"), "payload"
+    )
+    return web_df, robots_pages
+
+
+def _gated_crawls(spark, tmp_path, web) -> dict[str, set[str]]:
+    """Fetched-URL sets of the oracle (rules dict) and of the engine in
+    both ordering modes (rules DataFrame), all gated by the robots.txt
+    pages the web serves."""
+    from spacetime_crawler4py_spark.functions.robots import (
+        build_robots_rules_df,
+    )
+    from spacetime_crawler4py_spark.oracle.pycrawler import OracleCrawler
+    from spacetime_crawler4py_spark.sources.store import SnapshotStore
+    from spacetime_crawler4py_spark.streaming.epochs import (
+        CrawlEngine, EngineConfig,
+    )
+
+    web_df, robots_pages = _web_frames(spark, web)
+    oracle = OracleCrawler(web, robots=build_robots_rules(robots_pages))
+    fetched = {"oracle": {url for *_, url in oracle.run().crawl_order}}
+    for ordering in ("exact", "relaxed"):
+        store = SnapshotStore(spark, str(tmp_path / ordering))
+        eng = CrawlEngine(
+            spark, store, web_df,
+            EngineConfig(ordering=ordering, neardup="off"),
+            robots_df=build_robots_rules_df(robots_pages),
+        )
+        eng.seed(web.seeds)
+        eng.run()
+        fetched[ordering] = {r.url for r in store.read("fetch_log").collect()}
+    return fetched
+
+
+def test_engine_gates_links_with_fetched_robots(spark, tmp_path):
+    """Full flow: /robots.txt payloads come out of the fetch oracle, the
+    DataFrame builder parses them into the rules dim, and the crawl's
+    link gate keeps disallowed paths out of the frontier/seen set while
+    honoring the more specific Allow carve-out."""
+    from spacetime_crawler4py_spark.functions.robots import (
+        build_robots_rules_df,
+    )
     from spacetime_crawler4py_spark.sources.store import SnapshotStore
     from spacetime_crawler4py_spark.streaming.epochs import CrawlEngine, EngineConfig
 
     host = "www.ics.uci.edu"
-    page = (
-        b"<html><body>"
-        b'<a href="/about/team">team</a> '
-        b'<a href="/private/secrets">secrets</a> '
-        b'<a href="/private/pub/ok">carved out</a> '
-        b"twenty words of body text follow: "
-        + b"word " * 20 + b"</body></html>"
+    web = _site(
+        host, b"User-agent: *\nDisallow: /private\nAllow: /private/pub/\n",
+        ["/about/team", "/private/secrets", "/private/pub/ok"],
     )
-    sub = b"<html><body>about page " + b"filler " * 25 + b"</body></html>"
-    rows = [
-        (f"https://{host}/robots.txt", 200, f"https://{host}/robots.txt",
-         "text/plain",
-         b"User-agent: *\nDisallow: /private\nAllow: /private/pub/\n", host),
-        # note: engine-normalized form (no trailing slash on the root)
-        (f"https://{host}", 200, f"https://{host}", "text/html", page, host),
-        (f"https://{host}/about/team", 200, f"https://{host}/about/team",
-         "text/html", sub, host),
-        (f"https://{host}/private/secrets", 200,
-         f"https://{host}/private/secrets", "text/html", sub, host),
-        (f"https://{host}/private/pub/ok", 200,
-         f"https://{host}/private/pub/ok", "text/html", sub, host),
-    ]
-    web_df = spark.createDataFrame(
-        rows,
-        "url string, status int, final_url string, content_type string, "
-        "payload binary, domain string",
-    )
-    robots_pages = web_df.where(F.col("url").endswith("/robots.txt")).select(
-        F.col("domain").alias("host"), "payload"
-    )
+    web_df, robots_pages = _web_frames(spark, web)
     rules = build_robots_rules(robots_pages)
     assert rules == {host: ["-/private", "+/private/pub/"]}
 
     store = SnapshotStore(spark, str(tmp_path / "robots-crawl"))
     eng = CrawlEngine(
         spark, store, web_df,
-        EngineConfig(ordering="relaxed", neardup="off", robots=rules),
+        EngineConfig(ordering="relaxed", neardup="off"),
+        robots_df=build_robots_rules_df(robots_pages),
     )
-    eng.seed([f"https://{host}"])
+    eng.seed(web.seeds)
     eng.run()
     seen_urls = {r.url for r in store.read("frontier").collect()}
     assert f"https://{host}/about/team" in seen_urls
@@ -277,85 +328,35 @@ def test_build_rules_from_dataframe(spark):
 
 
 def test_join_gate_matches_dict_gate_crawl(spark, tmp_path):
-    """robots_df join mode (the 10^7-host path: rules never reach the
-    driver) must produce the identical crawl to the broadcast-dict gate
-    on the same web + rules."""
-    from pyspark.sql import functions as F
-
-    from spacetime_crawler4py_spark.functions.robots import (
-        build_robots_rules_df,
-    )
-    from spacetime_crawler4py_spark.sources.store import SnapshotStore
-    from spacetime_crawler4py_spark.streaming.epochs import (
-        CrawlEngine, EngineConfig,
-    )
-
+    """The engine's robots_df join gate, in both ordering modes, must
+    produce the identical crawl to the oracle's rules-dict gate on the
+    same web + rules."""
     host = "gatejoin.ics.uci.edu"
-    page = (
-        b"<html><body>"
-        b'<a href="/about/team">t</a> <a href="/private/secrets">s</a> '
-        b'<a href="/private/pub/ok">ok</a> '
-        + b"word " * 20 + b"</body></html>"
+    web = _site(
+        host, b"User-agent: *\nDisallow: /private\nAllow: /private/pub/\n",
+        ["/about/team", "/private/secrets", "/private/pub/ok"],
     )
-    sub = b"<html><body>about page " + b"filler " * 25 + b"</body></html>"
-    rows = [
-        (f"https://{host}/robots.txt", 200, f"https://{host}/robots.txt",
-         "text/plain",
-         b"User-agent: *\nDisallow: /private\nAllow: /private/pub/\n", host),
-        (f"https://{host}", 200, f"https://{host}", "text/html", page, host),
-        (f"https://{host}/about/team", 200, f"https://{host}/about/team",
-         "text/html", sub, host),
-        (f"https://{host}/private/secrets", 200,
-         f"https://{host}/private/secrets", "text/html", sub, host),
-        (f"https://{host}/private/pub/ok", 200,
-         f"https://{host}/private/pub/ok", "text/html", sub, host),
-    ]
-    web_df = spark.createDataFrame(
-        rows,
-        "url string, status int, final_url string, content_type string, "
-        "payload binary, domain string",
-    )
-    robots_pages = web_df.where(F.col("url").endswith("/robots.txt")).select(
-        F.col("domain").alias("host"), "payload"
-    )
+    fetched = _gated_crawls(spark, tmp_path, web)
+    assert fetched["exact"] == fetched["oracle"]
+    assert fetched["relaxed"] == fetched["oracle"]
+    assert f"https://{host}/private/pub/ok" in fetched["oracle"]
+    assert f"https://{host}/private/secrets" not in fetched["oracle"]
 
-    results = {}
-    for mode in ("dict", "join"):
-        store = SnapshotStore(spark, str(tmp_path / f"gate-{mode}"))
-        if mode == "dict":
-            eng = CrawlEngine(
-                spark, store, web_df,
-                EngineConfig(ordering="relaxed", neardup="off",
-                             robots=build_robots_rules(robots_pages)),
-            )
-        else:
-            eng = CrawlEngine(
-                spark, store, web_df,
-                EngineConfig(ordering="relaxed", neardup="off"),
-                robots_df=build_robots_rules_df(robots_pages),
-            )
-        eng.seed([f"https://{host}"])
-        eng.run()
-        results[mode] = {r.url for r in store.read("frontier").collect()}
-    assert results["dict"] == results["join"]
-    assert f"https://{host}/private/pub/ok" in results["join"]
-    assert f"https://{host}/private/secrets" not in results["join"]
 
-    # guard rails: mutually exclusive with the dict; relaxed-only
-    import pytest as _pytest
-
-    rdf = build_robots_rules_df(robots_pages)
-    with _pytest.raises(ValueError, match="not both"):
-        CrawlEngine(
-            spark, SnapshotStore(spark, str(tmp_path / "g1")), web_df,
-            EngineConfig(ordering="relaxed", robots={"h": ["-/x"]}),
-            robots_df=rdf,
-        )
-    with _pytest.raises(ValueError, match="relaxed"):
-        CrawlEngine(
-            spark, SnapshotStore(spark, str(tmp_path / "g2")), web_df,
-            EngineConfig(ordering="exact"), robots_df=rdf,
-        )
+def test_robots_gate_judges_the_canonical_url(spark, tmp_path):
+    """``Disallow: /private/`` against a page linking ``/private/`` and
+    ``/about/``: the crawl requests the canonical ``https://host/private``
+    (no trailing slash), and RFC 9309 §2.2.2 matches rules against the
+    requested path, which ``/private/`` does not prefix. The oracle, the
+    exact-mode crawl and the relaxed-mode crawl must all judge that
+    canonical URL and fetch the same URL set."""
+    host = "www.ics.uci.edu"
+    web = _site(host, b"User-agent: *\nDisallow: /private/\n",
+                ["/private/", "/about/"])
+    fetched = _gated_crawls(spark, tmp_path, web)
+    want = {f"https://{host}", f"https://{host}/private",
+            f"https://{host}/about"}
+    assert fetched == {"oracle": want, "exact": want, "relaxed": want}
 
 
 def test_join_gate_100k_hosts_without_driver_dict(spark):
@@ -431,7 +432,9 @@ def test_ruleless_group_delay_is_rfc_not_robotparser():
 
 
 def test_build_crawl_delays_from_dataframe(spark):
-    from spacetime_crawler4py_spark.functions.robots import build_crawl_delays
+    from spacetime_crawler4py_spark.functions.robots import (
+        build_crawl_delays_df,
+    )
 
     pages = spark.createDataFrame(
         [
@@ -441,14 +444,15 @@ def test_build_crawl_delays_from_dataframe(spark):
         ],
         "host string, payload binary",
     )
-    assert build_crawl_delays(pages) == {"a.uci.edu": 3.0}
+    dim = build_crawl_delays_df(pages).collect()
+    assert {r.domain: r.crawl_delay for r in dim} == {"a.uci.edu": 3.0}
 
 
 def test_crawl_delay_dim_100k_hosts_without_driver_dict(spark):
     """Host-scale Crawl-delay contract (mirror of the rules-join test):
     10^5 hosts' delays parsed into a (domain, crawl_delay) dim that never
     lands on the driver, ready to join onto the domain-partitioned fetch
-    batch (EngineConfig.crawl_delays_df)."""
+    batch (CrawlEngine's crawl_delays_df)."""
     from pyspark.sql import functions as F
 
     from spacetime_crawler4py_spark.functions.robots import (

@@ -1,9 +1,9 @@
-"""watermark_dim="store": the per-domain (served, enqueued) dim lives
-only in the watermarks table, advanced by distributed merges — the
+"""The relaxed engine's per-domain (served, enqueued) dim lives only in
+the watermarks table, advanced by distributed merges — the
 10^7+-domain path where O(domains) driver dicts would not fit. Contract:
-identical crawl results to driver mode, the same crash-window repair
-(done as a join instead of a collect), and zero growth of driver-held
-per-domain state even at 10^5 domains."""
+enqueued tracks the frontier's per-domain max(seq), resume and the
+crash-window repair run as joins instead of collects, and the engine
+holds no per-domain driver state even at 10^5 domains."""
 
 from __future__ import annotations
 
@@ -37,38 +37,43 @@ def _sets(store):
     )
 
 
-def test_store_mode_matches_driver_mode(spark, web, web_df, tmp_path):
-    results = {}
-    for mode in ("driver", "store"):
-        store = SnapshotStore(spark, str(tmp_path / mode))
-        eng = CrawlEngine(
-            spark, store, web_df,
-            EngineConfig(ordering="relaxed", neardup="off",
-                         rounds_per_epoch=2, watermark_dim=mode),
-        )
-        eng.seed(web.seeds)
-        eng.run()
-        results[mode] = _sets(store)
-        if mode == "store":
-            # the whole point: no per-domain driver state, ever
-            assert eng._watermarks == {} and eng._next_seq == {}
-            wm = {
-                r.domain: (r.served, r.enqueued)
-                for r in store.read("watermarks").collect()
-            }
-            fmax = {
-                r.domain: r.m
-                for r in store.read("frontier")
-                .groupBy("domain").agg(F.max("seq").alias("m")).collect()
-            }
-            for dom, m in fmax.items():
-                assert wm[dom][1] == m, (dom, wm[dom], m)
-    assert results["driver"] == results["store"]
+def _driver_collections(eng):
+    """The engine's non-empty driver-side containers (dicts, sets,
+    lists). A relaxed-mode engine must hold none: every per-domain or
+    per-URL fact lives in a table or a DataFrame."""
+    return {
+        k: v for k, v in vars(eng).items()
+        if isinstance(v, (dict, set, list, tuple)) and v
+    }
+
+
+def test_relaxed_engine_holds_no_per_domain_dict(spark, web, web_df, tmp_path):
+    store = SnapshotStore(spark, str(tmp_path / "relaxed"))
+    eng = CrawlEngine(
+        spark, store, web_df,
+        EngineConfig(ordering="relaxed", neardup="off", rounds_per_epoch=2),
+    )
+    assert _driver_collections(eng) == {}
+    eng.seed(web.seeds)
+    eng.run()
+    assert _driver_collections(eng) == {}
+    wm = {
+        r.domain: (r.served, r.enqueued)
+        for r in store.read("watermarks").collect()
+    }
+    fmax = {
+        r.domain: r.m
+        for r in store.read("frontier")
+        .groupBy("domain").agg(F.max("seq").alias("m")).collect()
+    }
+    for dom, m in fmax.items():
+        assert wm[dom][1] == m, (dom, wm[dom], m)
+    # the crawl ran to fixpoint: every enqueued row was served
+    assert all(served == enq for served, enq in wm.values()), wm
 
 
 def test_store_mode_resume(spark, web, web_df, tmp_path):
-    cfg = dict(ordering="relaxed", neardup="off", rounds_per_epoch=2,
-               watermark_dim="store")
+    cfg = dict(ordering="relaxed", neardup="off", rounds_per_epoch=2)
     store_a = SnapshotStore(spark, str(tmp_path / "sa"))
     eng_a = CrawlEngine(spark, store_a, web_df, EngineConfig(**cfg))
     eng_a.seed(web.seeds)
@@ -80,18 +85,18 @@ def test_store_mode_resume(spark, web, web_df, tmp_path):
     eng_b1.run(max_rounds=2)
     del eng_b1
     eng_b2 = CrawlEngine(spark, store_b, web_df, EngineConfig(**cfg))
-    assert eng_b2._watermarks == {} and eng_b2._next_seq == {}
+    assert _driver_collections(eng_b2) == {}
     eng_b2.run()
     assert _sets(store_a) == _sets(store_b)
 
 
 def test_store_mode_crash_window_repair(spark, web, web_df, tmp_path):
-    """Same stale-snapshot crash window as the driver-mode test, repaired
-    by the distributed resume merge instead of a driver collect."""
+    """A stale watermarks snapshot (crash between the frontier append and
+    the watermark merge) is repaired by the distributed resume merge
+    instead of a driver collect."""
     import shutil
 
-    cfg = dict(ordering="relaxed", neardup="off", rounds_per_epoch=2,
-               watermark_dim="store")
+    cfg = dict(ordering="relaxed", neardup="off", rounds_per_epoch=2)
     store = SnapshotStore(spark, str(tmp_path / "crash"))
     eng = CrawlEngine(spark, store, web_df, EngineConfig(**cfg))
     eng.seed(web.seeds)
@@ -125,7 +130,7 @@ def test_store_mode_crash_window_repair(spark, web, web_df, tmp_path):
 def test_store_mode_100k_domains_no_driver_state(spark, tmp_path):
     """10^5 domains, externally seeded (as a cluster deployment would):
     one epoch serves every domain once, the watermark dim materializes as
-    a 10^5-row table, and the driver's per-domain dicts stay EMPTY."""
+    a 10^5-row table, and the driver holds no per-domain state."""
     n = 100_000
     page = b"<html><body>" + b"word " * 25 + b"</body></html>"
 
@@ -152,12 +157,12 @@ def test_store_mode_100k_domains_no_driver_state(spark, tmp_path):
     eng = CrawlEngine(
         spark, store, None,
         EngineConfig(ordering="relaxed", neardup="off", use_bloom=False,
-                     collect_metrics=False, watermark_dim="store"),
+                     collect_metrics=False),
         fetcher=fetcher,
     )
-    assert eng._watermarks == {} and eng._next_seq == {}
+    assert _driver_collections(eng) == {}
     eng.run(max_rounds=1)
-    assert eng._watermarks == {} and eng._next_seq == {}
+    assert _driver_collections(eng) == {}
     wm = store.read("watermarks")
     assert wm.count() == n
     assert wm.where("served = 1").count() == n
