@@ -125,9 +125,6 @@ def main():
             print(f"FAIL  {name}: spark error {type(e).__name__}: {e}")
             fails.append(name)
             continue
-        if name not in oracles:
-            print(f"rows  {name}: {len(srows)} rows (no oracle) [{time.time()-t0:.1f}s]")
-            continue
         try:
             cur = con.execute(oracles[name])
             ocols = [d[0] for d in cur.description]

@@ -11,8 +11,8 @@ Five families, per the build brief:
                  at τ, without the O(N²) scan)
 * MinHash+LSH  — banded signatures → bucket equi-join → verify (scale path)
 * SimHash      — 64-bit sketch + hamming-ball candidate pairs
-* embedding    — cosine near-dup over an embedding column (JVM-native
-                 zip_with/aggregate arithmetic)
+* embedding    — JVM-native cosine (zip_with/aggregate arithmetic), the
+                 kernel of similarity_search's near-dup and top-k plans
 """
 
 from __future__ import annotations
@@ -23,12 +23,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
-from ..functions.fingerprint import minhash_bands, minhash_signature, simhash64
+from ..functions.fingerprint import minhash_bands, minhash_signature
 from .textstats import report_tokens_col
 
 __all__ = [
     "exact_dup_groups",
-    "shingles_col",
     "shingles_exploded",
     "ngram_jaccard_pairs",
     "minhash_lsh_pairs",
@@ -37,7 +36,6 @@ __all__ = [
     "simhash_pairs",
     "cross_corpus_contamination",
     "cosine_sim_col",
-    "embedding_near_dup_pairs",
 ]
 
 
@@ -61,21 +59,6 @@ def exact_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # n-gram Jaccard (relational, exact)
 # ---------------------------------------------------------------------------
-
-def shingles_col(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram strings as a native expression."""
-    tokens = report_tokens_col(text)
-    idx = F.sequence(F.lit(0), F.greatest(F.size(tokens) - n, F.lit(-1)))
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(tokens, (i + j + 1).cast("int")) for j in range(n)]
-        ),
-    )
-    return F.when(F.size(tokens) >= n, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
-
 
 def shingles_exploded(
     df: DataFrame,
@@ -668,20 +651,3 @@ def cosine_sim_col(a: Column, b: Column) -> Column:
         F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x)
     )
     return dot / (norm(a) * norm(b))
-
-
-def embedding_near_dup_pairs(
-    df: DataFrame, id_col: str, vec_col: str, threshold: float = 0.95
-) -> DataFrame:
-    """(id, id2, cos_sim) for pairs with cosine >= threshold. Exact
-    all-pairs baseline; the scale path is the LSH variant in
-    similarity_search.lsh_bucketed_topk."""
-    a = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v1"))
-    b = df.select(F.col(id_col).alias("id2"), F.col(vec_col).alias("v2"))
-    return (
-        a.crossJoin(b)
-        .where(F.col("id") < F.col("id2"))
-        .withColumn("cos_sim", F.round(cosine_sim_col(F.col("v1"), F.col("v2")), 4))
-        .where(F.col("cos_sim") >= threshold)
-        .select("id", "id2", "cos_sim")
-    )

@@ -233,7 +233,7 @@ def lsh_bucketed_topk(
     k: int = 10,
     # production default = the measured efficiency frontier at recall>=0.9
     # on the synthetic corpus's near-orthogonal (hard-regime) neighbors —
-    # see scripts/bench_ann_sweep.py / BENCH/ANN_SWEEP.md. Corpora with
+    # see the sweep results in BENCH/ANN_SWEEP.md. Corpora with
     # tighter clusters can raise n_planes to shrink the candidate set.
     n_planes: int = 5,
     n_tables: int = 32,

@@ -15,12 +15,11 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.tokenize import NOISE_WORDS, STOPWORDS
+from ..functions.tokenize import STOPWORDS
 
 __all__ = [
     "report_tokens_col",
     "tokens_exploded",
-    "word_count_col",
     "stopword_count_col",
     "quality_cols",
     "quality_model",
@@ -47,10 +46,6 @@ def report_tokens_col(text: Column) -> Column:
     lowered = F.lower(text)
     no_poss = F.regexp_replace(lowered, r"\b([a-z]+)['’]s\b", r"$1")
     return F.regexp_extract_all(no_poss, F.lit(r"[a-z]{2,}"), 0)
-
-
-def word_count_col(text: Column) -> Column:
-    return F.size(report_tokens_col(text))
 
 
 def tokens_exploded(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

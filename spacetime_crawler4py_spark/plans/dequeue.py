@@ -20,7 +20,7 @@ one task — the indexed path avoids per-domain partitioning entirely.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -28,6 +28,8 @@ __all__ = [
     "politeness_heads_indexed",
     "DISCOVERY_ORDER",
     "SALT_BUCKETS",
+    "salt_of",
+    "salt_col",
 ]
 
 # the deterministic per-domain FIFO key (SURVEY §2.6 'seq')
@@ -36,6 +38,18 @@ DISCOVERY_ORDER = ["rk_round", "rk_pop", "rk_pos"]
 # skew salting (north_rule): the frontier's salt column spreads a hot
 # domain's rows over this many buckets for the salted rank below
 SALT_BUCKETS = 8
+
+
+def salt_of(url_hash: str) -> int:
+    """A URL's salt bucket: its url_hash's first 8 hex digits mod
+    SALT_BUCKETS, the same in every process (unlike Python's hash())."""
+    return int(url_hash[:8], 16) % SALT_BUCKETS
+
+
+def salt_col(url_hash: Column) -> Column:
+    """Column twin of ``salt_of``."""
+    digits = F.conv(F.substring(url_hash, 1, 8), 16, 10).cast("long")
+    return (digits % SALT_BUCKETS).cast("int")
 
 
 # columns the exact mode's fetch/parse stage needs; ranking shuffles only

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.urlkit import udf_url_hash
-from ..plans.dequeue import SALT_BUCKETS
+from ..plans.dequeue import salt_col
 
 __all__ = ["synthetic_crawl_inputs", "make_synthetic_fetcher"]
 
@@ -98,7 +98,8 @@ def synthetic_crawl_inputs(
     n_words: int = 120,
     seed_fraction: float = 1.0,
 ) -> tuple[DataFrame, DataFrame]:
-    """Returns (frontier_df with engine FRONTIER_SCHEMA columns, web_df).
+    """Returns (frontier_df with the columns of the engine's
+    ``ARROW_SCHEMAS["frontier"]``, web_df).
 
     ``seed_fraction`` < 1 pre-seeds only that share of URLs (by id stride);
     crawling then *discovers* the rest through outlinks, exercising the
@@ -119,14 +120,15 @@ def synthetic_crawl_inputs(
     if seed_fraction < 1.0:
         stride = max(2, int(round(1 / seed_fraction)))
         seed_base = with_url.where(F.pmod("id", F.lit(stride)) == 0)
-    # seq: the permanent per-domain FIFO position (engine FRONTIER_SCHEMA);
-    # a one-time generation cost, not part of the measured crawl
+    # seq: the permanent per-domain FIFO position (see the engine's
+    # ARROW_SCHEMAS["frontier"]); a one-time generation cost, not part of
+    # the measured crawl
     w_seq = Window.partitionBy("domain").orderBy("id")
-    frontier = seed_base.select(
-        udf_url_hash("url").alias("url_hash"),
+    frontier = seed_base.withColumn("url_hash", udf_url_hash("url")).select(
+        "url_hash",
         "url",
         "domain",
-        F.pmod(F.xxhash64("url"), F.lit(SALT_BUCKETS)).cast("int").alias("salt"),
+        salt_col(F.col("url_hash")).alias("salt"),
         F.lit(None).cast("string").alias("parent"),
         F.lit(-1).cast("bigint").alias("rk_round"),
         F.lit("").alias("rk_pop"),

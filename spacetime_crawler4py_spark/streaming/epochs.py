@@ -59,48 +59,19 @@ from ..functions.fingerprint import NEAR_DUP_TAU, SKETCH_SCHEME, jaccard
 from ..functions.robots import robots_gate_join
 from ..plans.dequeue import (
     DISCOVERY_ORDER,
-    SALT_BUCKETS,
     politeness_heads,
     politeness_heads_indexed,
+    salt_col,
+    salt_of,
 )
 from ..plans.parse_stage import PARSED_SCHEMA, make_parse_stage
 from ..sources.store import SnapshotStore
 
 __all__ = ["CrawlEngine", "EngineConfig"]
 
-# seq = the row's permanent 1-based position in its domain's FIFO,
-# assigned once at insert (monotone: every later insert sorts after every
-# earlier one, because rk_round is the strictly-increasing epoch counter).
-# It turns the politeness dequeue into a pure filter — see
-# plans.dequeue.politeness_heads_indexed.
-FRONTIER_SCHEMA = (
-    "url_hash string, url string, domain string, salt int, parent string, "
-    "rk_round bigint, rk_pop string, rk_pos int, epoch_added bigint, "
-    "seq bigint"
-)
-COMPLETIONS_SCHEMA = "url_hash string, round bigint"
-SEEN_SCHEMA = "url_hash string"
-WATERMARKS_SCHEMA = "domain string, served bigint, enqueued bigint"
-DOCUMENTS_SCHEMA = (
-    "doc_id string, domain string, round bigint, word_count int, "
-    "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-)
-FINGERPRINTS_SCHEMA = (
-    "doc_id string, ord_round bigint, ord_pop string, "
-    "fps array<bigint>, bands array<bigint>"
-)
-FETCHLOG_SCHEMA = (
-    "round bigint, url string, url_hash string, domain string, "
-    "gate string, checksum string, doc_id string"
-)
-METRICS_SCHEMA = (
-    "round bigint, pops bigint, parsed_ok bigint, new_urls bigint, "
-    "docs_saved bigint, near_dups bigint, exact_dups bigint, wall_s double"
-)
-
 
 def _arrow_schemas():
-    """pyarrow twins of the DDL schemas above (driver-side small appends)."""
+    """The schema of every state table (pyarrow appends use it too)."""
     import pyarrow as pa
 
     span = pa.struct(
@@ -108,6 +79,11 @@ def _arrow_schemas():
          ("media_ref", pa.string()), ("offset", pa.int32())]
     )
     return {
+        # seq = the row's permanent 1-based position in its domain's FIFO,
+        # assigned once at insert (monotone: every later insert sorts after
+        # every earlier one, because rk_round is the strictly-increasing
+        # epoch counter). It turns the politeness dequeue into a pure
+        # filter — see plans.dequeue.politeness_heads_indexed.
         "frontier": pa.schema(
             [("url_hash", pa.string()), ("url", pa.string()),
              ("domain", pa.string()), ("salt", pa.int32()),
@@ -479,7 +455,7 @@ class CrawlEngine:
             seq = counters.get(dom, 0) + 1
             counters[dom] = seq
             rows.append(
-                (h, url, dom, self._salt_of(url), None, -1, "", i, -1, seq)
+                (h, url, dom, salt_of(h), None, -1, "", i, -1, seq)
             )
         names = [f.name for f in ARROW_SCHEMAS["frontier"]]
         rows.sort(key=lambda r: r[-1])  # seq-sorted like every frontier delta
@@ -502,9 +478,6 @@ class CrawlEngine:
         )
         if self._bloom is not None:
             self._bloom.add_many(r[0] for r in rows)
-
-    def _salt_of(self, url: str) -> int:
-        return hash(url) % SALT_BUCKETS
 
     def _pending_df(self) -> DataFrame:
         frontier = self.store.read("frontier")
@@ -722,7 +695,7 @@ class CrawlEngine:
                 seq = self._next_seq.get(link.domain, 0) + 1
                 self._next_seq[link.domain] = seq
                 new_frontier_rows.append(
-                    (h, link.url, link.domain, self._salt_of(link.url),
+                    (h, link.url, link.domain, salt_of(h),
                      row.doc_id or row.url, round_no, f"{pop_idx:08d}",
                      link.pos, round_no, seq)
                 )
@@ -863,8 +836,7 @@ class CrawlEngine:
 
         new_rows = new_links.select(
             "url_hash", "url", "domain",
-            F.pmod(F.xxhash64("url"), F.lit(SALT_BUCKETS))
-            .cast("int").alias("salt"),
+            salt_col(F.col("url_hash")).alias("salt"),
             "parent",
             (F.lit(base) + F.col("slot") - 1).cast("long").alias("rk_round"),
             F.col("parent_domain").alias("rk_pop"),

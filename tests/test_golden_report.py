@@ -8,8 +8,9 @@ Status of parity (also reproducible via scripts/golden_report_check.py):
   (https://cml.ics.uci.edu/category/aiml @ 24,057 words), and ALL 50
   top-word counts match EXACTLY.
 Two parser edge cases decided the last tokens, both found by ctypes
-differential probes against system libxml2 (scripts/lxml_oracle_probe.py,
-scripts/lxml_sax_probe.py):
+differential probes against system libxml2 (a tree diff, then a SAX-event
+diff, over every saved page; the probes are retired, their findings are
+these two):
 * round 2: HTML5's comment-end-bang ("--!>" closes a comment;
   html.parser requires "-->") — one faculty page, 518 swallowed tokens,
   now normalized in the extractor.

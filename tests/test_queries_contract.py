@@ -1,12 +1,12 @@
-"""Contract test: every queries() entry runs at sf0.001 and, where an
-oracle_sql() twin exists, matches DuckDB row-for-row (the same comparison
-the driver makes at sf0.01: row count + sorted-column value equality)."""
+"""Contract test: every queries() entry runs at sf0.001 and matches its
+oracle_sql() twin on DuckDB row-for-row (the same comparison the external
+correctness gate makes at sf0.01: row count + sorted-column value equality)."""
 
 from __future__ import annotations
 
 import math
-
 import os
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -50,11 +50,7 @@ def test_query_runs_and_matches_oracle(spark, ddb, name):
     df = fn(spark, SF_DIR)
     cols = df.columns
     rows = [tuple(r) for r in df.collect()]
-    assert rows is not None
-    sql = entrymod.oracle_sql().get(name)
-    if sql is None:
-        return  # rows-only operators (sketch/LSH): just assert they run
-    res = ddb.sql(sql)
+    res = ddb.sql(entrymod.oracle_sql()[name])
     oracle_cols = [d[0] for d in res.description]
     oracle_rows = res.fetchall()
     assert sorted(cols) == sorted(oracle_cols), (cols, oracle_cols)
@@ -69,32 +65,28 @@ def test_entry_smoke(spark):
 
 
 def test_driver_gate_window_invariant():
-    """Structural guard for the ORDERING POLICY in queries(): the driver
-    attests only the FIRST 50 entries per round, so every query without a
-    green row in CORRECTNESS_r04.json (new this round, or code-touched so
-    its old row no longer vouches for it) MUST sit inside the window —
-    otherwise it could ship with no independent driver evidence at all.
-    The policy itself (why the tail is safe) lives in the queries()
-    comment and README; this test pins the invariant mechanically."""
-    import json
-
+    """The external correctness gate attests only the first 50 entries of
+    queries() per round, so every query that the newest CORRECTNESS_r*.json
+    does not vouch for (new, red, or beyond last round's window) must sit
+    inside the window."""
+    root = Path(__file__).resolve().parent.parent
+    rounds = entrymod.hash_green_rounds(root)
+    assert rounds, f"no CORRECTNESS_r*.json next to {root}"
+    newest = rounds[max(rounds)]
     names = list(entrymod.queries())
-    window = set(names[:50])
-    with open("/root/repo/CORRECTNESS_r04.json") as f:
-        r04 = {
-            k for k, v in json.load(f).items()
-            if v.get("rows_match") and v.get("hash_match") is not False
-        }
-    # queries whose round-5 code changes invalidate the r04 attestation
-    touched = {
-        "curation_full", "corpus_build", "dup_span_removal", "doc_chunks",
-        "crawl_budget",
+    outside = (set(names) - newest) - set(names[:50])
+    assert not outside, f"unattested queries outside the 50-entry window: {sorted(outside)}"
+    assert set(names) == set(entrymod.oracle_sql())
+
+
+def test_stale_first_order_is_stable():
+    names = ["a", "b", "c", "d", "e"]
+    assert entrymod.stale_first_order(names, {}) == names
+    rounds = {
+        3: {"b", "c", "d"},
+        1: {"a", "b", "c", "d"},
+        2: {"a", "c"},
     }
-    unattested = (set(names) - r04) | touched
-    outside = unattested - window
-    assert not outside, (
-        f"never-/stale-attested queries outside the 50-row gate window: "
-        f"{sorted(outside)}"
-    )
-    # and every oracle key actually has a query (no orphan oracles)
-    assert set(entrymod.oracle_sql()) <= set(names)
+    # e: never green; a: last green r2; b, c, d: r3 (ties keep names order)
+    assert entrymod.stale_first_order(names, rounds) == ["e", "a", "b", "c", "d"]
+    assert entrymod.stale_first_order(["d", "c", "e"], rounds) == ["e", "d", "c"]
