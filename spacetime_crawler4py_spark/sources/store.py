@@ -20,6 +20,11 @@ reads ≙ versioned manifests):
 Manifests are JSON files swapped with ``os.replace`` (atomic on POSIX);
 every manifest version is retained, so a reader never sees a partial
 commit and history stays navigable.
+
+Appends to *distinct* tables may run concurrently (each commit touches
+only its own table's manifest), but two appends to one table may not:
+both would read the same current version and the later swap would drop
+the other's delta.
 """
 
 from __future__ import annotations
@@ -146,12 +151,13 @@ class SnapshotStore:
 
     def compact(
         self, name: str, df: "DataFrame | None" = None,
-        sort_by: list[str] | None = None,
+        sort_by: list[str] | None = None, properties: dict | None = None,
     ) -> int:
         """Rewrite the table as one base dir. With df=None, compacts the
         current contents (must be materialized before the manifest swap,
         hence the write-then-commit order). ``sort_by`` re-establishes the
-        table's write order (see append) across the whole base."""
+        table's write order (see append) across the whole base.
+        ``properties`` are updated in the same manifest swap as the rows."""
         if df is None:
             df = self.read(name)
         if sort_by:
@@ -160,7 +166,7 @@ class SnapshotStore:
             self._tdir(name), f"base-{self.current_version(name) + 1:06d}"
         )
         df.write.mode("overwrite").parquet(base_dir)
-        return self._commit(name, [base_dir])
+        return self._commit(name, [base_dir], properties)
 
     def compact_tail(
         self,

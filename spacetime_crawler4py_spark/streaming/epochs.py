@@ -20,11 +20,20 @@ Two ordering disciplines:
 * ``ordering="relaxed"`` — scale mode. Everything is DataFrame-native:
   window-ranked token-budget dequeue (plans/dequeue.py), fused
   fetch+parse mapInPandas, distributed first-occurrence dedup
-  (window over url_hash), Bloom-prefiltered anti-join against the seen
-  set, and appends. ``rounds_per_epoch`` politeness quanta batch into one
-  epoch for throughput; newly discovered domains start at the next epoch
-  (the one documented scheduling deviation — URL-seen set and per-domain
-  FIFO discipline are unaffected).
+  (a ``min_by`` aggregate per url_hash on the discovery key),
+  Bloom-prefiltered anti-join against the seen set, and appends.
+  ``rounds_per_epoch`` politeness quanta batch into one epoch for
+  throughput; newly discovered domains start at the next epoch (the one
+  documented scheduling deviation — URL-seen set and per-domain FIFO
+  discipline are unaffected).
+
+  The epoch's commit phase submits its independent appends together from
+  a driver thread pool, so Spark runs their small jobs at the same time:
+  (a) frontier, then seen plus the Bloom increment; (b) completions;
+  (c) documents; (d) fingerprints; (e) fetch_log. Only when all five have
+  committed does the watermarks compact run — the epoch's commit point —
+  followed by the metrics row. The metrics counts are observed
+  (``DataFrame.observe``) on the jobs that already run, not recounted.
 
 Each politeness dimension has one home, a table or DataFrame; in relaxed
 mode none is a driver dict, so driver state stays O(1) at any host count:
@@ -46,11 +55,13 @@ semantics frontier.py:48-59).
 from __future__ import annotations
 
 import heapq
+import threading
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import urlkit
@@ -123,6 +134,21 @@ def _arrow_schemas():
 ARROW_SCHEMAS = _arrow_schemas()
 
 
+def _once(fn):
+    """``fn()`` computed at most once across threads; every caller gets
+    that one result (a call that raised is retried by the next caller)."""
+    lock = threading.Lock()
+    box: list = []
+
+    def get():
+        with lock:
+            if not box:
+                box.append(fn())
+            return box[0]
+
+    return get
+
+
 @dataclass
 class EngineConfig:
     """Scalar knobs only; the per-domain politeness dims are DataFrames
@@ -144,7 +170,9 @@ class EngineConfig:
     # to the bloom false-positive sliver; turn off only for tiny crawls
     # where the filter build outweighs the join savings.
     use_bloom: bool = True
-    collect_metrics: bool = True           # False skips optional count jobs
+    # metrics are observed on the epoch's own jobs in every config, so this
+    # selects nothing; kept only for callers that still pass it
+    collect_metrics: bool = True
     compact_every: int = 0                 # >0: compact state tables every N epochs
     dedup_doc_ids: bool = True             # False when the fetcher can't redirect
                                            # (doc_id collisions impossible) —
@@ -227,8 +255,15 @@ class CrawlEngine:
     # state & snapshots
     # ------------------------------------------------------------------
     def _resume(self) -> None:
+        # relaxed mode resumes at the round its last committed epoch
+        # recorded on the watermarks table (the epoch's commit point), so a
+        # replayed epoch reuses its round numbers even when its completions
+        # outlived the crash; otherwise the round after the last completion
+        next_round = self.store.get_property("watermarks", "next_round")
         comp = self.store.read_or_none("completions")
-        if comp is not None:
+        if self.cfg.ordering == "relaxed" and next_round is not None:
+            self._round = int(next_round)
+        elif comp is not None:
             row = comp.agg(F.max("round").alias("m")).collect()[0]
             self._round = int(row.m) + 1 if row.m is not None else 0
         frontier = self.store.read_or_none("frontier")
@@ -757,13 +792,17 @@ class CrawlEngine:
         parsed.persist()
         # one job materializes the fetch+parse AND yields the per-domain
         # served counts for the watermark advance, kept as a persisted
-        # DataFrame; only the global pop count comes to the driver
+        # DataFrame; only the global pop and parsed-ok counts come to the
+        # driver
         adds_df = parsed.groupBy("domain").agg(
-            F.count("*").alias("_add")
+            F.count("*").alias("_add"),
+            F.count_if(F.col("gate") == "ok").alias("_ok"),
         ).persist()
-        pops = int(
-            adds_df.agg(F.coalesce(F.sum("_add"), F.lit(0))).collect()[0][0]
-        )
+        totals = adds_df.agg(
+            F.coalesce(F.sum("_add"), F.lit(0)),
+            F.coalesce(F.sum("_ok"), F.lit(0)),
+        ).collect()[0]
+        pops, parsed_ok = int(totals[0]), int(totals[1])
         if pops == 0:
             parsed.unpersist()
             adds_df.unpersist()
@@ -869,28 +908,6 @@ class CrawlEngine:
             .drop("_brn", "base_seq")
             .select(*[f.name for f in ARROW_SCHEMAS["frontier"]])
         )
-        n_new = new_rows.count() if self.cfg.collect_metrics else -1
-        # seq-sorted delta: keeps row-group min/max stats on seq tight so
-        # the dequeue's max_seq_bound conjunct prunes at the parquet scan
-        self.store.append("frontier", new_rows, sort_by=["seq"])
-        # the committed delta read-back is the cheap source for the seen
-        # append, the bloom increment, AND the enqueue-counter advance
-        # (avoids recomputing the candidate pipeline)
-        delta = self.store.read_last_delta("frontier")
-        self.store.append("seen", delta.select("url_hash"))
-        if self._bloom is not None:
-            inc = BloomFilter.build_from_df_with_shape(
-                delta, "url_hash", self._bloom.n_bits, self._bloom.k
-            )
-            self._bloom.merge_inplace(inc)
-
-        self.store.append(
-            "completions",
-            parsed.select(
-                "url_hash", (F.lit(base) + F.col("slot") - 1).cast("long").alias("round")
-            ),
-        )
-
         # documents + near-dup (lsh or off) — pop order key = (round, domain)
         docs = ok.select(
             "doc_id", "domain", "slot", "word_count", "spans", "fps", "bands",
@@ -904,9 +921,10 @@ class CrawlEngine:
             docs.groupBy("doc_id").count().where(F.col("count") > 1)
             .select("doc_id")
         ) if self.cfg.dedup_doc_ids else None
-        if dup_ids is None or dup_ids.isEmpty():
-            docs_first = docs
-        else:
+
+        def first_per_doc_id() -> DataFrame:
+            if dup_ids is None or dup_ids.isEmpty():
+                return docs
             doc_w = Window.partitionBy("doc_id").orderBy("ord_round", "ord_pop")
             dup_docs = docs.join(F.broadcast(dup_ids), "doc_id")
             winners = (
@@ -914,77 +932,146 @@ class CrawlEngine:
                 .where(F.col("_rn") == 1)
                 .drop("_rn")
             )
-            docs_first = docs.join(
+            return docs.join(
                 F.broadcast(dup_ids), "doc_id", "left_anti"
             ).unionByName(winners)
-        # persist: the LSH band self-join + prior-fingerprints scan behind
-        # near_df otherwise re-executes for each of its consumers (saved
-        # count, documents append, near-dup metric) — 3x the epoch's
-        # dominant join
-        near_df = self._flag_near_dups_lsh(docs_first).persist()
+
+        # units (c) and (d) share one collision probe, run by whichever asks
+        # first, so the probe job overlaps the other units too
+        docs_first = _once(first_per_doc_id)
+        # every snapshot the commit reads is taken here, before any unit
+        # commits: the seen set (frontier_hashes above), watermarks (wm),
+        # prior documents and prior fingerprints
         prior_docs = self.store.read_or_none("documents")
-        to_save = near_df.where(~F.col("is_near_dup"))
-        if prior_docs is not None:
-            to_save = to_save.join(
-                prior_docs.select("doc_id"), "doc_id", "left_anti"
-            )
-        saved_df = to_save.select(
-            "doc_id", "domain", F.col("ord_round").alias("round"),
-            "word_count", "spans",
+        prior_fps = (
+            self.store.read_or_none("fingerprints")
+            if self.cfg.neardup != "off" else None
         )
-        collect = self.cfg.collect_metrics
-        n_saved = saved_df.count() if collect else -1
-        self.store.append("documents", saved_df)
-        if self.cfg.neardup != "off":
+        observed_new = Observation()
+        observed_near = Observation()
+        observed_saved = Observation()
+
+        def frontier_and_seen() -> DataFrame:
+            # seq-sorted delta: keeps row-group min/max stats on seq tight
+            # so the dequeue's max_seq_bound conjunct prunes at the parquet
+            # scan
+            self.store.append("frontier", new_rows, sort_by=["seq"])
+            # the committed delta read-back is the cheap source for the seen
+            # append, the bloom increment, AND the enqueue-counter advance
+            # (avoids recomputing the candidate pipeline). new_urls is
+            # observed here, not on the frontier append: the sort's
+            # range-partition sampling job re-runs that plan and would
+            # count every row twice
+            delta = self.store.read_last_delta("frontier")
+            self.store.append("seen", delta.select("url_hash").observe(
+                observed_new, F.count(F.lit(1)).alias("n")
+            ))
+            if self._bloom is not None:
+                inc = BloomFilter.build_from_df_with_shape(
+                    delta, "url_hash", self._bloom.n_bits, self._bloom.k
+                )
+                self._bloom.merge_inplace(inc)
+            return delta
+
+        def completions() -> None:
             self.store.append(
-                "fingerprints",
-                docs_first.select("doc_id", "ord_round", "ord_pop", "fps", "bands"),
+                "completions",
+                parsed.select(
+                    "url_hash",
+                    (F.lit(base) + F.col("slot") - 1).cast("long").alias("round"),
+                ),
             )
-        self.store.append(
-            "fetch_log",
-            parsed.select(
-                (F.lit(base) + F.col("slot") - 1).cast("long").alias("round"),
-                "url", "url_hash", "domain", "gate", "checksum", "doc_id",
-            ),
-        )
-        stats = {
-            "pops": pops,
-            "parsed_ok": ok.count() if collect else -1,
-            "new_urls": n_new,
-            "docs_saved": n_saved,
-            "near_dups": near_df.where(F.col("is_near_dup")).count()
-            if (collect and self.cfg.neardup != "off") else 0,
-            "exact_dups": 0,  # metric-only quirk; see exact mode
-        }
-        near_df.unpersist()
+
+        def documents() -> None:
+            near_df = self._flag_near_dups_lsh(docs_first(), prior_fps).observe(
+                observed_near, F.count_if("is_near_dup").alias("n")
+            )
+            to_save = near_df.where(~F.col("is_near_dup"))
+            if prior_docs is not None:
+                to_save = to_save.join(
+                    prior_docs.select("doc_id"), "doc_id", "left_anti"
+                )
+            self.store.append("documents", to_save.select(
+                "doc_id", "domain", F.col("ord_round").alias("round"),
+                "word_count", "spans",
+            ).observe(observed_saved, F.count(F.lit(1)).alias("n")))
+
+        def fingerprints() -> None:
+            if self.cfg.neardup != "off":
+                self.store.append("fingerprints", docs_first().select(
+                    "doc_id", "ord_round", "ord_pop", "fps", "bands"
+                ))
+
+        def fetch_log() -> None:
+            self.store.append(
+                "fetch_log",
+                parsed.select(
+                    (F.lit(base) + F.col("slot") - 1).cast("long").alias("round"),
+                    "url", "url_hash", "domain", "gate", "checksum", "doc_id",
+                ),
+            )
+
+        # None of the five units reads another's output, so Spark runs their
+        # jobs side by side. A crash can therefore leave ANY subset of them
+        # committed (not just a prefix of one order); the replayed epoch
+        # stays idempotent per table:
+        # * frontier, seen: unit (a) keeps frontier before seen, and
+        #   _resume's backfill mirrors an orphan frontier delta into seen;
+        #   the replay's seen anti-join then inserts nothing twice;
+        # * documents: the prior-docs anti-join above;
+        # * completions, fetch_log: rows are re-appended, and summary()
+        #   reads completions through distinct();
+        # * fingerprints: re-appended rows never flag their own doc, since
+        #   the LSH join matches only a strictly earlier (ord_round, ord_pop)
+        #   and the replay keeps the epoch's rounds (_resume reads them from
+        #   the watermarks commit, not from completions that may have
+        #   outlived the crash).
+        units = (frontier_and_seen, completions, documents, fingerprints,
+                 fetch_log)
+        with ThreadPoolExecutor(max_workers=len(units)) as pool:
+            futures = [pool.submit(unit) for unit in units]
+        # every unit has finished; re-raise the first failure before the
+        # commit point
+        delta = futures[0].result()
+        for future in futures[1:]:
+            future.result()
         # advance the per-domain served watermarks last: a crash earlier in
         # the epoch leaves the persisted snapshot untouched, so resume
-        # replays the whole epoch (at-least-once fetch; frontier/documents
-        # appends stay deduplicated by the seen anti-join and the prior-docs
-        # anti-join). Distributed merge of the old dim, the served-adds and
-        # this epoch's enqueue maxima, compacted as the new snapshot.
-        # O(domains) stays on the executors; the driver advances only its
-        # O(1) served upper bound.
+        # replays the whole epoch (at-least-once fetch). Distributed merge
+        # of the old dim, the served-adds and this epoch's enqueue maxima,
+        # compacted as the new snapshot. O(domains) stays on the executors;
+        # the driver advances only its O(1) served upper bound.
         delta_max = delta.groupBy("domain").agg(F.max("seq").alias("_dmax"))
         self.store.compact(
-            "watermarks", self._merged_watermarks(wm, adds_df, delta_max)
+            "watermarks", self._merged_watermarks(wm, adds_df, delta_max),
+            properties={"next_round": base + tokens},
         )
         self._max_served_bound += tokens
         adds_df.unpersist()
         parsed.unpersist()
         if flagged is not None:
             flagged.unpersist()
+        stats = {
+            "pops": pops,
+            "parsed_ok": parsed_ok,
+            "new_urls": observed_new.get["n"],
+            "docs_saved": observed_saved.get["n"],
+            "near_dups": observed_near.get["n"],
+            "exact_dups": 0,  # metric-only quirk; see exact mode
+        }
         self._write_metrics(base, stats, time.monotonic() - t0)
         self._round = base + tokens
         return True
 
-    def _flag_near_dups_lsh(self, docs_first: DataFrame) -> DataFrame:
-        """Banded MinHash candidate join + exact-Jaccard verification.
-        'Previously seen' = earlier (ord_round, ord_pop) or a prior-epoch
-        doc (SURVEY §2.4 epoch-ordering convention)."""
+    def _flag_near_dups_lsh(
+        self, docs_first: DataFrame, prior: DataFrame | None
+    ) -> DataFrame:
+        """Banded MinHash candidate join + exact-Jaccard verification
+        against this epoch's docs and ``prior`` (the fingerprints snapshot,
+        or None). 'Previously seen' = earlier (ord_round, ord_pop) or a
+        prior-epoch doc (SURVEY §2.4 epoch-ordering convention)."""
         if self.cfg.neardup == "off":
             return docs_first.withColumn("is_near_dup", F.lit(False))
-        prior = self.store.read_or_none("fingerprints")
         left = docs_first.select(
             "doc_id", "ord_round", "ord_pop", "fps",
             F.posexplode("bands").alias("band_idx", "band_val"),

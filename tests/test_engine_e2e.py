@@ -5,6 +5,7 @@ set, and span sequences (north_rule parity targets)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType, IntegerType, StringType, StructField, StructType,
 )
@@ -184,3 +185,52 @@ def test_exact_mode_neardup_off_saves_documents(spark, web, web_df, tmp_path_fac
         ordering="exact", neardup="exact",
     )
     assert n_docs >= store2.read("documents").count()
+
+
+@pytest.mark.parametrize(
+    "cfg",
+    [dict(neardup="lsh"), dict(neardup="off", collect_metrics=False)],
+    ids=["lsh", "off"],
+)
+def test_relaxed_metrics_equal_table_counts(
+    spark, web, web_df, tmp_path_factory, cfg
+):
+    """Each relaxed epoch's metrics row equals counts taken from the
+    tables it committed, in every config. Redirects answer 404 here so no
+    doc_id recurs; then every ok page of an epoch has one fingerprints
+    row, and the ones not saved are its near-dups."""
+    tokens = 2
+    no_redirects = web_df.withColumn(
+        "status",
+        F.when(F.col("final_url") != F.col("url"), F.lit(404))
+        .otherwise(F.col("status")),
+    )
+    store, _ = _run_engine(
+        spark, web, no_redirects,
+        tmp_path_factory.mktemp("observed"),
+        ordering="relaxed", rounds_per_epoch=tokens, **cfg,
+    )
+    log = store.read("fetch_log")
+    ok_ids = [r.doc_id for r in log.where("gate = 'ok'").collect()]
+    assert len(ok_ids) == len(set(ok_ids)), "fixture must not repeat doc_ids"
+    frontier = store.read("frontier")
+    docs = store.read("documents")
+    fps = store.read("fingerprints") if cfg["neardup"] != "off" else None
+    rows = store.read("metrics").orderBy("round").collect()
+    assert len(rows) > 1
+    for m in rows:
+        lo, hi = m.round, m.round + tokens
+        in_epoch = (F.col("round") >= lo) & (F.col("round") < hi)
+        assert m.pops == log.where(in_epoch).count()
+        assert m.new_urls == frontier.where(F.col("epoch_added") == lo).count()
+        assert m.parsed_ok == log.where(in_epoch & (F.col("gate") == "ok")).count()
+        assert m.docs_saved == docs.where(in_epoch).count()
+        if fps is None:
+            assert m.near_dups == 0
+        else:
+            n_fps = fps.where(
+                (F.col("ord_round") >= lo) & (F.col("ord_round") < hi)
+            ).count()
+            assert m.near_dups == n_fps - m.docs_saved
+    if fps is not None:
+        assert sum(m.near_dups for m in rows) > 0, "fixture has no near-dups"

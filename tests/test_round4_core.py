@@ -13,6 +13,9 @@
 from __future__ import annotations
 
 import shutil
+import sys
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,7 +23,11 @@ from pyspark.sql import functions as F
 from spacetime_crawler4py_spark.functions.bloom import BloomFilter
 from spacetime_crawler4py_spark.sources.store import SnapshotStore
 from spacetime_crawler4py_spark.sources.webgen import generate_web
-from spacetime_crawler4py_spark.streaming.epochs import CrawlEngine, EngineConfig
+from spacetime_crawler4py_spark.streaming.epochs import (
+    CrawlEngine,
+    EngineConfig,
+    _once,
+)
 
 WEB_SCHEMA = (
     "url string, status int, final_url string, content_type string, "
@@ -48,15 +55,35 @@ def _sets(store):
 # ---------------------------------------------------------------------------
 # (a) frontier↔seen crash window
 # ---------------------------------------------------------------------------
-def test_seen_backfill_after_frontier_seen_crash(spark, web, web_df, tmp_path):
-    """Simulate a crash immediately after the relaxed epoch's frontier
-    append: every OTHER table's manifest is rolled back to its pre-epoch
-    version while the frontier keeps the new delta. The resumed run must
-    (1) not duplicate any url_hash in the frontier, (2) keep the URL-seen
-    set identical to an uninterrupted run, (3) keep per-domain politeness
-    slots unique. neardup is off so the at-least-once epoch replay is
-    exactly idempotent (same caveat as the stale-watermark test)."""
-    cfg = dict(ordering="relaxed", neardup="off", rounds_per_epoch=2)
+# The relaxed epoch commits five units concurrently: (a) frontier then
+# seen, (b) completions, (c) documents, (d) fingerprints, (e) fetch_log;
+# the watermarks compact follows them all. A crash can leave any subset
+# committed. Each case keeps the named tables' epoch-2 commits and rolls
+# every other table back; case a keeps only the frontier half of unit (a).
+# Case bd runs near-dup detection: with completions surviving, a replay
+# that moved to later round numbers would find each doc's own committed
+# fingerprint "earlier" and drop the doc as its own near-dup.
+CRASH_CASES = {
+    "a": (("frontier",), "off"),
+    "b": (("completions",), "off"),
+    "c": (("documents",), "off"),
+    "e": (("fetch_log",), "off"),
+    "bd": (("completions", "fingerprints"), "lsh"),
+}
+
+
+@pytest.mark.parametrize("unit", list(CRASH_CASES))
+def test_seen_backfill_after_frontier_seen_crash(
+    spark, web, web_df, tmp_path, unit
+):
+    """Simulate a crash in epoch 2's commit phase that leaves some
+    tables' appends committed: every OTHER table's manifest is rolled back
+    to its pre-epoch version. The resumed run must (1) not duplicate any
+    url_hash in the frontier, (2) keep the URL-seen set and saved
+    documents identical to an uninterrupted run, (3) keep per-domain
+    politeness slots unique."""
+    survivors, neardup = CRASH_CASES[unit]
+    cfg = dict(ordering="relaxed", neardup=neardup, rounds_per_epoch=2)
     store_a = SnapshotStore(spark, str(tmp_path / "ua"))
     eng_a = CrawlEngine(spark, store_a, web_df, EngineConfig(**cfg))
     eng_a.seed(web.seeds)
@@ -66,11 +93,15 @@ def test_seen_backfill_after_frontier_seen_crash(spark, web, web_df, tmp_path):
     eng_b = CrawlEngine(spark, store_b, web_df, EngineConfig(**cfg))
     eng_b.seed(web.seeds)
     eng_b.run(max_rounds=1)
-    # versions after epoch 1 = the state a crash right after epoch 2's
-    # frontier append would leave for every table except the frontier
-    others = ("seen", "completions", "documents", "fetch_log", "watermarks",
-              "metrics")
-    stale = {t: store_b.current_version(t) for t in others}
+    # versions after epoch 1 = the state the crash leaves for every table
+    # except the surviving ones
+    tables = ("frontier", "seen", "completions", "documents", "fingerprints",
+              "fetch_log", "watermarks", "metrics")
+    stale = {
+        t: store_b.current_version(t)
+        for t in tables
+        if t not in survivors and store_b.current_version(t)
+    }
     eng_b.run(max_rounds=1)
     del eng_b
     for t, v in stale.items():
@@ -97,6 +128,36 @@ def test_seen_backfill_after_frontier_seen_crash(spark, web, web_df, tmp_path):
     )
     assert dup_slots == 0
     assert _sets(store_a) == _sets(store_b)
+
+
+def test_once_runs_its_function_once_across_threads():
+    """The commit units that share the doc_id collision probe get one
+    evaluation between them, however their threads interleave."""
+    calls = []
+
+    def probe():
+        calls.append(1)
+        time.sleep(0.01)  # widen the check-then-act window
+        return object()
+
+    get = _once(probe)
+    results = []
+    threads = [
+        threading.Thread(target=lambda: results.append(get()))
+        for _ in range(16)
+    ]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=10)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(calls) == 1
+    assert len(results) == 16 and all(r is results[0] for r in results)
 
 
 def test_seed_crash_between_frontier_and_seen(spark, web, web_df, tmp_path):
