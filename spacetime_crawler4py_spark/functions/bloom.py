@@ -1,4 +1,4 @@
-"""Broadcastable Bloom filter over URL-seen hashes.
+"""Bloom filter over URL-seen hashes.
 
 Replaces the reference's shelve-backed ``self.save`` membership probe
 (reference crawler/frontier.py:93) at scale, per the north_rule. The filter
@@ -11,11 +11,17 @@ hex string (functions/urlkit.url_hash), so k bit positions come from the
 double-hashing scheme idx_i = (h1 + i*h2) mod m with h1/h2 = two 64-bit
 slices of the digest.
 
-Sizing note for 10^10 URLs (SURVEY §7): a single 10-bits/key filter is
-~12 GB — too big to broadcast. The intended cluster layout is per-bucket
-filters aligned to frontier hash-buckets (each executor probes only its
-bucket's slice); this module supports that by building one filter per
-pmod(bucket) via ``build_partitioned``. Locally a single filter suffices.
+Lifecycle in the relaxed engine: the filter is built from the seen table
+at resume (``build_from_df``, one ``mapInArrow`` pass), broadcast once per
+epoch, and probed inside the fetch+parse stage, which also ORs every probed
+key's bits into an accumulator with ``OR_BITS``; the driver merges that
+increment after the epoch's first job. OR is idempotent, so a retried or
+recomputed task cannot corrupt the increment, and the extra keys it may
+carry (robots-blocked links) can only add false positives.
+
+Sizing note: at 10 bits/key one filter is ~1.2 GB per 10^9 URLs, and it is
+broadcast whole. Beyond the size a worker can hold, the filter would have
+to be split per frontier hash-bucket; no such layout is built here.
 """
 
 from __future__ import annotations
@@ -24,8 +30,28 @@ import math
 
 import numpy as np
 import pandas as pd
+from pyspark.accumulators import AccumulatorParam
 
-__all__ = ["BloomFilter", "PartitionedBloom"]
+__all__ = ["BloomFilter", "OR_BITS"]
+
+
+class _OrBits(AccumulatorParam):
+    """Accumulator over filter bitmaps (uint8 arrays of one shape): the
+    sum is bitwise OR. ``None`` is the empty bitmap, so a task that adds
+    nothing ships nothing back."""
+
+    def zero(self, value):
+        return None
+
+    def addInPlace(self, value1, value2):
+        if value1 is None:
+            return value2
+        if value2 is not None:
+            np.bitwise_or(value1, value2, out=value1)
+        return value1
+
+
+OR_BITS = _OrBits()
 
 
 class BloomFilter:
@@ -42,32 +68,47 @@ class BloomFilter:
         k = max(1, int(round(bits_per_key * math.log(2))))
         return cls(max(1024, n_items * bits_per_key), k)
 
-    def _positions(self, hex_hashes: pd.Series) -> np.ndarray:
-        """(len, k) array of bit positions for sha256-hex keys."""
-        h1 = np.array(
-            [int(h[:16], 16) for h in hex_hashes], dtype=np.uint64
-        )
-        h2 = np.array(
-            [int(h[16:32], 16) | 1 for h in hex_hashes], dtype=np.uint64
-        )
+    def _positions(self, hex_hashes) -> np.ndarray:
+        """(len, k) array of bit positions for sha256-hex keys; h1 and h2
+        are the digest's first two big-endian 64-bit words."""
+        raw = bytes.fromhex("".join([h[:32] for h in hex_hashes]))
+        words = np.frombuffer(raw, dtype=">u8").astype(np.uint64).reshape(-1, 2)
+        h1 = words[:, 0]
+        h2 = words[:, 1] | np.uint64(1)
         ks = np.arange(self.k, dtype=np.uint64)
         return (
             (h1[:, None] + ks[None, :] * h2[:, None]) % np.uint64(self.n_bits)
         )
 
+    @staticmethod
+    def _mark(bits: np.ndarray, pos: np.ndarray) -> None:
+        pos = pos.ravel()
+        np.bitwise_or.at(bits, pos // 8, (1 << (pos % 8)).astype(np.uint8))
+
     def add_many(self, hex_hashes) -> None:
-        s = pd.Series(list(hex_hashes), dtype=object)
-        if s.empty:
-            return
-        pos = self._positions(s).ravel()
-        np.bitwise_or.at(self.bits, pos // 8, (1 << (pos % 8)).astype(np.uint8))
+        hex_hashes = list(hex_hashes)
+        if hex_hashes:
+            self._mark(self.bits, self._positions(hex_hashes))
+
+    def _contains(self, pos: np.ndarray) -> np.ndarray:
+        probe = (self.bits[pos // 8] >> (pos % 8).astype(np.uint8)) & 1
+        return probe.all(axis=1)
 
     def might_contain_series(self, hex_hashes: pd.Series) -> pd.Series:
         if hex_hashes.empty:
             return pd.Series([], dtype=bool)
+        return pd.Series(
+            self._contains(self._positions(hex_hashes)), index=hex_hashes.index
+        )
+
+    def probe_and_mark(self, hex_hashes: list[str]) -> tuple[np.ndarray, np.ndarray]:
+        """One vectorized pass over non-empty ``hex_hashes``: the maybe-seen
+        flag per key, and the bitmap of every probed key's bits (the
+        increment that adds them all to the filter)."""
         pos = self._positions(hex_hashes)
-        probe = (self.bits[pos // 8] >> (pos % 8).astype(np.uint8)) & 1
-        return pd.Series(probe.all(axis=1), index=hex_hashes.index)
+        inc = np.zeros_like(self.bits)
+        self._mark(inc, pos)
+        return self._contains(pos), inc
 
     def fill_rate(self) -> float:
         """Fraction of set bits. Drives the saturation rebuild: estimated
@@ -86,29 +127,31 @@ class BloomFilter:
 
     @classmethod
     def build_from_df(cls, df, column: str, n_items_hint: int, bits_per_key: int = 12):
-        """Build from a DataFrame column of sha256-hex keys: per-partition
-        numpy bitmaps OR-reduced — the one legitimately imperative
-        per-partition step in the engine (SURVEY §7 'Bloom lifecycle')."""
+        """Build from a DataFrame column of sha256-hex keys, sized for
+        ``n_items_hint`` keys."""
         proto = cls.sized_for(n_items_hint, bits_per_key)
         return cls.build_from_df_with_shape(df, column, proto.n_bits, proto.k)
 
     @classmethod
     def build_from_df_with_shape(cls, df, column: str, n_bits: int, k: int):
-        """Build an increment with a fixed shape (mergeable into an
-        existing filter without counting the input first)."""
+        """Build with a fixed shape: one ``mapInArrow`` task per partition
+        returns its bitmap, and the driver ORs them."""
+        import pyarrow as pa
 
-        def build_part(rows):
+        def build_part(batches):
             bf = cls(n_bits, k)
-            bf.add_many(r[0] for r in rows)
-            yield bf.bits
+            for batch in batches:
+                bf.add_many(batch.column(0).to_pylist())
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([bf.bits.tobytes()], pa.binary())], names=["bits"]
+            )
 
-        parts = df.select(column).rdd.mapPartitions(build_part)
-        merged = parts.treeReduce(np.bitwise_or)
         out = cls(n_bits, k)
-        out.bits = merged
+        for row in df.select(column).mapInArrow(build_part, "bits binary").collect():
+            out.bits |= np.frombuffer(row.bits, dtype=np.uint8)
         return out
 
-    # -- (de)serialization for broadcast -------------------------------------
+    # -- (de)serialization ----------------------------------------------------
     def to_state(self) -> tuple[int, int, bytes]:
         return (self.n_bits, self.k, self.bits.tobytes())
 
@@ -118,130 +161,3 @@ class BloomFilter:
         bf = cls(n_bits, k)
         bf.bits = np.frombuffer(raw, dtype=np.uint8).copy()
         return bf
-
-    @classmethod
-    def from_state_cached(
-        cls, token: str, state: tuple[int, int, bytes]
-    ) -> "BloomFilter":
-        """Worker-process-cached reconstruction: a probe UDF runs once per
-        Arrow batch, and rebuilding the filter (a full bitset copy) per
-        batch is pure waste — the broadcast state is immutable for the
-        lifetime of its token (one epoch). Keeps at most one cached filter
-        per worker."""
-        bf = _PROBE_CACHE.get(token)
-        if bf is None:
-            _PROBE_CACHE.clear()
-            bf = cls.from_state(state)
-            _PROBE_CACHE[token] = bf
-        return bf
-
-
-_PROBE_CACHE: dict[str, "BloomFilter"] = {}
-
-
-def _bucket_of(hex_hashes: pd.Series, n_buckets: int) -> np.ndarray:
-    """Bucket routing key: top 64 bits of the sha256 digest mod n_buckets —
-    the same slice BloomFilter uses for h1, so routing needs no extra
-    hashing and aligns with pmod-style frontier hash-bucketing."""
-    h1 = np.array([int(h[:16], 16) for h in hex_hashes], dtype=np.uint64)
-    return (h1 % np.uint64(n_buckets)).astype(np.int64)
-
-
-class PartitionedBloom:
-    """The 10^10-scale seen-filter layout (SURVEY §7): one BloomFilter per
-    hash-bucket instead of a single ~12 GB monolith. On a cluster each
-    executor holds/probes only the buckets co-located with its frontier
-    partitions; locally the dict of slices behaves exactly like one big
-    filter with k-probe semantics per slice."""
-
-    def __init__(self, filters: dict[int, BloomFilter], n_buckets: int):
-        self.filters = filters
-        self.n_buckets = n_buckets
-
-    @classmethod
-    def sized_for(
-        cls, n_items: int, n_buckets: int, bits_per_key: int = 12
-    ) -> "PartitionedBloom":
-        per = max(1024, n_items // max(n_buckets, 1))
-        return cls(
-            {b: BloomFilter.sized_for(per, bits_per_key) for b in range(n_buckets)},
-            n_buckets,
-        )
-
-    def add_many(self, hex_hashes) -> None:
-        s = pd.Series(list(hex_hashes), dtype=object)
-        if s.empty:
-            return
-        buckets = _bucket_of(s, self.n_buckets)
-        for b in np.unique(buckets):
-            self.filters[int(b)].add_many(s[buckets == b])
-
-    def might_contain_series(self, hex_hashes: pd.Series) -> pd.Series:
-        if hex_hashes.empty:
-            return pd.Series([], dtype=bool)
-        buckets = _bucket_of(hex_hashes, self.n_buckets)
-        out = np.zeros(len(hex_hashes), dtype=bool)
-        for b in np.unique(buckets):
-            mask = buckets == b
-            out[mask] = self.filters[int(b)].might_contain_series(
-                hex_hashes[mask]
-            ).to_numpy()
-        return pd.Series(out, index=hex_hashes.index)
-
-    def merge_inplace(self, other: "PartitionedBloom") -> None:
-        assert other.n_buckets == self.n_buckets
-        for b, f in other.filters.items():
-            self.filters[b].merge_inplace(f)
-
-    @classmethod
-    def build_partitioned(
-        cls,
-        df,
-        column: str,
-        n_buckets: int,
-        n_items_hint: int,
-        bits_per_key: int = 12,
-    ) -> "PartitionedBloom":
-        """Distributed build: per-partition (bucket -> bitmap) dicts,
-        OR-reduced pairwise — each task only materializes slices for the
-        buckets it actually saw."""
-        proto = cls.sized_for(n_items_hint, n_buckets, bits_per_key)
-        shapes = {b: (f.n_bits, f.k) for b, f in proto.filters.items()}
-
-        def build_part(rows):
-            local: dict[int, BloomFilter] = {}
-            s = pd.Series([r[0] for r in rows], dtype=object)
-            if s.empty:
-                yield {}
-                return
-            buckets = _bucket_of(s, n_buckets)
-            for b in np.unique(buckets):
-                n_bits, k = shapes[int(b)]
-                bf = BloomFilter(n_bits, k)
-                bf.add_many(s[buckets == b])
-                local[int(b)] = bf
-            yield {b: f.bits for b, f in local.items()}
-
-        def merge(a: dict, b: dict) -> dict:
-            for key, bits in b.items():
-                if key in a:
-                    a[key] = np.bitwise_or(a[key], bits)
-                else:
-                    a[key] = bits
-            return a
-
-        merged = df.select(column).rdd.mapPartitions(build_part).treeReduce(merge)
-        out = cls.sized_for(n_items_hint, n_buckets, bits_per_key)
-        for b, bits in merged.items():
-            out.filters[b].bits = bits.copy()
-        return out
-
-    def to_state(self) -> tuple[int, dict[int, tuple[int, int, bytes]]]:
-        return (self.n_buckets, {b: f.to_state() for b, f in self.filters.items()})
-
-    @classmethod
-    def from_state(cls, state) -> "PartitionedBloom":
-        n_buckets, filt = state
-        return cls(
-            {b: BloomFilter.from_state(s) for b, s in filt.items()}, n_buckets
-        )

@@ -6,7 +6,8 @@ MinHash band keys, and the already-validated outlink candidates — i.e.
 everything downstream merge logic needs, so the expensive Python work
 happens exactly once per page (reference pipeline scraper.py:187-274; the
 reference's 4 worker threads overlap fetch+parse, here the whole batch is
-one parallel stage).
+one parallel stage). Given the epoch's Bloom seen-filter, the stage also
+probes every outlink in the same pass.
 """
 
 from __future__ import annotations
@@ -35,7 +36,8 @@ PARSED_SCHEMA = (
     "rk_round bigint, rk_pop string, rk_pos int, "
     "gate string, doc_id string, checksum string, word_count int, "
     f"spans {_SPAN_DDL}, fps array<bigint>, bands array<bigint>, "
-    "outlinks array<struct<url:string,url_hash:string,domain:string,pos:int>>"
+    "outlinks array<struct<url:string,url_hash:string,domain:string,pos:int,"
+    "maybe_seen:boolean>>"
 )
 
 
@@ -49,6 +51,7 @@ def make_parse_stage(
     politeness_delay: float = 0.0,
     delay_col: str | None = None,
     clock=None,
+    seen_filter=None,
 ):
     """Returns a mapInPandas function over rows with columns
     (url, url_hash, domain, slot, rk_round, rk_pop, rk_pos,
@@ -78,7 +81,14 @@ def make_parse_stage(
     budgets) and leave this off — real HTTP deployments turn it on.
 
     Outlinks are not robots-gated here: the engine joins its robots dim
-    onto the canonical candidate URLs after the stage."""
+    onto the canonical candidate URLs after the stage.
+
+    ``seen_filter`` is the epoch's ``(bloom, acc)`` pair: ``bloom`` a
+    broadcast functions.bloom.BloomFilter, ``acc`` an accumulator over
+    functions.bloom.OR_BITS. Each batch probes all its outlink hashes in
+    one vectorized call into the outlinks' ``maybe_seen`` field (False
+    proves the URL unseen) and adds their bits to ``acc``. Without it
+    ``maybe_seen`` is null."""
     if clock is None:
         import time as clock  # noqa: F811 — module provides monotonic+sleep
     pace = fetcher is not None and (
@@ -91,6 +101,7 @@ def make_parse_stage(
             if pace and "slot" in pdf.columns:
                 pdf = pdf.sort_values("slot", kind="stable")
             out: list[dict] = []
+            batch_links: list[dict] = []
             for row in pdf.itertuples(index=False):
                 rec = {
                     "url": row.url,
@@ -136,8 +147,9 @@ def make_parse_stage(
                     payload = row.payload
                     final_url = row.final_url
                 # content gates (reference scraper.py:200-216); a URL absent
-                # from the fetch oracle behaves like an error status
-                if status is None or int(status) != 200 or payload is None:
+                # from the fetch oracle behaves like an error status (the
+                # left join's null status arrives as NaN)
+                if pd.isna(status) or int(status) != 200 or payload is None:
                     rec["gate"] = "status"
                     out.append(rec)
                     continue
@@ -203,11 +215,21 @@ def make_parse_stage(
                             "url_hash": urlkit.url_hash(normalized),
                             "domain": urlkit.politeness_host(normalized),
                             "pos": pos,
+                            "maybe_seen": None,
                         }
                     )
                     pos += 1
                 rec["outlinks"] = links
+                batch_links.extend(links)
                 out.append(rec)
+            if seen_filter is not None and batch_links:
+                bloom, acc = seen_filter
+                flags, inc = bloom.value.probe_and_mark(
+                    [link["url_hash"] for link in batch_links]
+                )
+                for link, flag in zip(batch_links, flags.tolist()):
+                    link["maybe_seen"] = flag
+                acc.add(inc)
             yield pd.DataFrame(
                 out,
                 columns=[

@@ -21,7 +21,11 @@ Two ordering disciplines:
   window-ranked token-budget dequeue (plans/dequeue.py), fused
   fetch+parse mapInPandas, distributed first-occurrence dedup
   (a ``min_by`` aggregate per url_hash on the discovery key),
-  Bloom-prefiltered anti-join against the seen set, and appends.
+  Bloom-prefiltered anti-join against the seen set, and appends. The
+  Bloom probe runs inside the fetch+parse stage (one vectorized call per
+  Arrow batch over its outlinks), which also returns the filter's
+  increment through an OR accumulator; the epoch runs no Bloom-specific
+  Spark job.
   ``rounds_per_epoch`` politeness quanta batch into one epoch for
   throughput; newly discovered domains start at the next epoch (the one
   documented scheduling deviation — URL-seen set and per-domain FIFO
@@ -29,7 +33,7 @@ Two ordering disciplines:
 
   The epoch's commit phase submits its independent appends together from
   a driver thread pool, so Spark runs their small jobs at the same time:
-  (a) frontier, then seen plus the Bloom increment; (b) completions;
+  (a) frontier, then seen; (b) completions;
   (c) documents; (d) fingerprints; (e) fetch_log. Only when all five have
   committed does the watermarks compact run — the epoch's commit point —
   followed by the metrics row. The metrics counts are observed
@@ -57,7 +61,6 @@ from __future__ import annotations
 import heapq
 import threading
 import time
-import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
@@ -65,7 +68,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import urlkit
-from ..functions.bloom import BloomFilter
+from ..functions.bloom import OR_BITS, BloomFilter
 from ..functions.fingerprint import NEAR_DUP_TAU, SKETCH_SCHEME, jaccard
 from ..functions.robots import robots_gate_join
 from ..plans.dequeue import (
@@ -164,11 +167,11 @@ class EngineConfig:
     ordering: str = "relaxed"              # "relaxed" | "exact" (parity mode)
     rounds_per_epoch: int = 1              # relaxed-mode token budget
     neardup: str = "lsh"                   # "lsh" | "exact" (parity) | "off"
-    # Bloom prefilter before the seen anti-join: ON by default so the
-    # default config IS the benched config (BENCH/BASELINE.md runs bloom
-    # on). At 10^10 seen URLs the prefilter keeps the anti-join probe side
-    # to the bloom false-positive sliver; turn off only for tiny crawls
-    # where the filter build outweighs the join savings.
+    # Relaxed-mode Bloom prefilter before the seen anti-join: a URL the
+    # filter has never seen skips the join. The probe and the increment run
+    # inside the fetch+parse stage, so the filter's per-epoch cost is one
+    # broadcast; what is left is its build at resume. Exact mode builds
+    # none.
     use_bloom: bool = True
     # metrics are observed on the epoch's own jobs in every config, so this
     # selects nothing; kept only for callers that still pass it
@@ -222,17 +225,9 @@ class CrawlEngine:
         self.web_df = web_df
         self.cfg = config or EngineConfig()
         self._robots_df = robots_df
-        self._in_stage_fetch = fetcher is not None
-        pace = self.cfg.wallclock_politeness and self._in_stage_fetch
-        self._crawl_delays_df = crawl_delays_df if pace else None
-        self._parse_stage = make_parse_stage(
-            fetcher=fetcher,
-            compute_sketches=self.cfg.neardup != "off",
-            politeness_delay=self.cfg.politeness_delay if pace else 0.0,
-            delay_col=(
-                "crawl_delay" if self._crawl_delays_df is not None else None
-            ),
-        )
+        self._fetcher = fetcher
+        self._pace = self.cfg.wallclock_politeness and fetcher is not None
+        self._crawl_delays_df = crawl_delays_df if self._pace else None
         # in-memory mirrors rebuilt from snapshots on resume
         self._round = 0
         self._fps_index: list[tuple[str, frozenset]] = []  # exact near-dup
@@ -371,7 +366,7 @@ class CrawlEngine:
             ).distinct()
             if not missing.isEmpty():
                 self.store.append("seen", missing)
-        if self.cfg.use_bloom:
+        if self.cfg.use_bloom and self.cfg.ordering == "relaxed":
             seen = self.store.read_or_none("seen")
             if seen is not None:
                 n = seen.count()
@@ -524,15 +519,28 @@ class CrawlEngine:
     # ------------------------------------------------------------------
     # shared stages
     # ------------------------------------------------------------------
-    def _fetch_and_parse(self, dequeued: DataFrame) -> DataFrame:
+    def _fetch_and_parse(
+        self, dequeued: DataFrame, seen_filter=None
+    ) -> DataFrame:
         """dequeued columns: url, domain, slot, rk_round, rk_pop, rk_pos
         (+ url_hash in exact mode). Joins the fetch oracle (or fetches
-        in-stage), then the fused parse stage."""
+        in-stage), then the fused parse stage; ``seen_filter`` is the
+        epoch's (broadcast Bloom filter, OR accumulator) pair, see
+        plans.parse_stage.make_parse_stage."""
+        stage = make_parse_stage(
+            fetcher=self._fetcher,
+            compute_sketches=self.cfg.neardup != "off",
+            politeness_delay=self.cfg.politeness_delay if self._pace else 0.0,
+            delay_col=(
+                "crawl_delay" if self._crawl_delays_df is not None else None
+            ),
+            seen_filter=seen_filter,
+        )
         cols = ["url", "domain", "slot", "rk_round", "rk_pop", "rk_pos"]
         if "url_hash" in dequeued.columns:
             cols.insert(1, "url_hash")
         slim = dequeued.select(*cols)
-        if self._in_stage_fetch:
+        if self._fetcher is not None:
             if self._crawl_delays_df is not None:
                 # per-domain Crawl-delay rides the batch as a column; the
                 # dequeue already partitioned by domain, and the dim is
@@ -543,12 +551,12 @@ class CrawlEngine:
                     "domain",
                     "left",
                 )
-            return slim.mapInPandas(self._parse_stage, schema=PARSED_SCHEMA)
+            return slim.mapInPandas(stage, schema=PARSED_SCHEMA)
         web = F.broadcast(self.web_df.select(
             "url", "status", "final_url", "content_type", "payload"
         ))
         joined = slim.join(web, "url", "left")
-        return joined.mapInPandas(self._parse_stage, schema=PARSED_SCHEMA)
+        return joined.mapInPandas(stage, schema=PARSED_SCHEMA)
 
     def _robots_gate(self, links: DataFrame) -> DataFrame:
         """Keep the robots-allowed rows of ``links`` (a ``url`` column of
@@ -619,8 +627,6 @@ class CrawlEngine:
                 "seen", [{"url_hash": r[0]} for r in new_frontier_rows],
                 ARROW_SCHEMAS["seen"],
             )
-            if self._bloom is not None:
-                self._bloom.add_many(row[0] for row in new_frontier_rows)
         self.store.append_rows(
             "completions",
             [{"url_hash": by_url[u].url_hash, "round": round_no} for _, u in pop_order],
@@ -784,11 +790,19 @@ class CrawlEngine:
         # a domain never spans partitions (and a paced hot domain is
         # serialized anyway, so clustering it costs nothing).
         parallelism = self.spark.sparkContext.defaultParallelism
-        if self.cfg.wallclock_politeness and self._in_stage_fetch:
+        if self._pace:
             dequeued = dequeued.repartition(parallelism, "domain")
         else:
             dequeued = dequeued.repartition(parallelism)
-        parsed = self._fetch_and_parse(dequeued)
+        # the epoch's Bloom filter goes to the workers once; the parse stage
+        # probes every outlink with it and ORs their bits into bloom_acc
+        bloom = bloom_acc = None
+        if self._bloom is not None:
+            bloom = self.spark.sparkContext.broadcast(self._bloom)
+            bloom_acc = self.spark.sparkContext.accumulator(None, OR_BITS)
+        parsed = self._fetch_and_parse(
+            dequeued, (bloom, bloom_acc) if bloom is not None else None
+        )
         parsed.persist()
         # one job materializes the fetch+parse AND yields the per-domain
         # served counts for the watermark advance, kept as a persisted
@@ -803,9 +817,22 @@ class CrawlEngine:
             F.coalesce(F.sum("_ok"), F.lit(0)),
         ).collect()[0]
         pops, parsed_ok = int(totals[0]), int(totals[1])
+        if bloom is not None:
+            # every outlink passed through the stage in that job; the
+            # increment may add keys beyond the URLs this epoch inserts
+            # (robots-blocked links), which can only cost false positives
+            if bloom_acc.value is not None:
+                inc = BloomFilter(self._bloom.n_bits, self._bloom.k)
+                inc.bits = bloom_acc.value
+                self._bloom.merge_inplace(inc)
+            # pyspark keeps every accumulator for the session's life; drop
+            # this one's bitmap
+            bloom_acc.value = None
         if pops == 0:
             parsed.unpersist()
             adds_df.unpersist()
+            if bloom is not None:
+                bloom.destroy()
             return False
 
         # candidate links in deterministic discovery order
@@ -823,6 +850,7 @@ class CrawlEngine:
                 F.col("link.domain").alias("domain"),
                 "slot", "parent_domain", "parent",
                 F.col("link.pos").alias("pos"),
+                F.col("link.maybe_seen").alias("maybe_seen"),
             )
         )
         # first-occurrence winner per url_hash via min_by on the discovery
@@ -832,46 +860,42 @@ class CrawlEngine:
         # (row_number over url_hash) would shuffle all duplicates and sort
         # each partition with no combine.
         first_key = F.struct("slot", "parent_domain", "pos")
-        firsts = (
-            cand.groupBy("url_hash")
-            .agg(
-                F.min_by(
-                    F.struct("url", "domain", "slot", "parent_domain",
-                             "parent", "pos"),
-                    first_key,
-                ).alias("_w")
+
+        def first_occurrences(links: DataFrame) -> DataFrame:
+            return (
+                links.groupBy("url_hash")
+                .agg(
+                    F.min_by(
+                        F.struct("url", "domain", "slot", "parent_domain",
+                                 "parent", "pos"),
+                        first_key,
+                    ).alias("_w")
+                )
+                .select("url_hash", "_w.*")
             )
-            .select("url_hash", "_w.*")
-        )
-        # robots gate AFTER first-occurrence dedup (one evaluation per
-        # distinct URL, not per discovery) and BEFORE the seen probe: the
-        # gate is a per-URL pure predicate, so the result is the same
-        firsts = self._robots_gate(firsts)
+
         frontier_hashes = self.store.read("seen")
-        flagged = None
-        if self._bloom is not None:
-            state = self._bloom.to_state()
-            token = f"{id(self)}-{base}-{uuid.uuid4().hex[:8]}"
-
-            def probe(s):
-                return BloomFilter.from_state_cached(
-                    token, state
-                ).might_contain_series(s)
-
-            from pyspark.sql.pandas.functions import pandas_udf
-            from pyspark.sql.types import BooleanType
-
-            probe_udf = pandas_udf(probe, returnType=BooleanType())
-            # persist the probed firsts so the definitely-new / maybe-seen
-            # branches don't each recompute the candidate window + probe
-            flagged = firsts.withColumn("_maybe", probe_udf("url_hash")).persist()
-            definitely_new = flagged.where(~F.col("_maybe")).drop("_maybe")
-            maybe_seen = flagged.where(F.col("_maybe")).drop("_maybe")
-            new_links = definitely_new.unionByName(
-                maybe_seen.join(frontier_hashes, "url_hash", "left_anti")
+        if bloom is not None:
+            # maybe_seen is a pure function of url_hash, so every discovery
+            # of a URL lands on one side of the split, and each side's
+            # aggregate shuffles only its own rows. False proves the URL
+            # new; only the maybe-seen side probes the seen set. (Splitting
+            # one aggregate's output instead makes Spark run that aggregate
+            # twice: the two union branches do not share its exchange.)
+            firsts = first_occurrences(
+                cand.where(~F.col("maybe_seen"))
+            ).unionByName(
+                first_occurrences(cand.where(F.col("maybe_seen")))
+                .join(frontier_hashes, "url_hash", "left_anti")
             )
         else:
-            new_links = firsts.join(frontier_hashes, "url_hash", "left_anti")
+            firsts = first_occurrences(cand).join(
+                frontier_hashes, "url_hash", "left_anti"
+            )
+        # robots gate AFTER first-occurrence dedup and the seen probe, so it
+        # evaluates each new URL once; it is a per-URL pure predicate like
+        # the probe, so the order does not change the result
+        new_links = self._robots_gate(firsts)
 
         new_rows = new_links.select(
             "url_hash", "url", "domain",
@@ -957,8 +981,8 @@ class CrawlEngine:
             # scan
             self.store.append("frontier", new_rows, sort_by=["seq"])
             # the committed delta read-back is the cheap source for the seen
-            # append, the bloom increment, AND the enqueue-counter advance
-            # (avoids recomputing the candidate pipeline). new_urls is
+            # append AND the enqueue-counter advance (avoids recomputing the
+            # candidate pipeline). new_urls is
             # observed here, not on the frontier append: the sort's
             # range-partition sampling job re-runs that plan and would
             # count every row twice
@@ -966,11 +990,6 @@ class CrawlEngine:
             self.store.append("seen", delta.select("url_hash").observe(
                 observed_new, F.count(F.lit(1)).alias("n")
             ))
-            if self._bloom is not None:
-                inc = BloomFilter.build_from_df_with_shape(
-                    delta, "url_hash", self._bloom.n_bits, self._bloom.k
-                )
-                self._bloom.merge_inplace(inc)
             return delta
 
         def completions() -> None:
@@ -1049,8 +1068,8 @@ class CrawlEngine:
         self._max_served_bound += tokens
         adds_df.unpersist()
         parsed.unpersist()
-        if flagged is not None:
-            flagged.unpersist()
+        if bloom is not None:
+            bloom.destroy()
         stats = {
             "pops": pops,
             "parsed_ok": parsed_ok,

@@ -1,16 +1,16 @@
 """Bloom seen-filter properties: no false negatives ever (a False probe
 must prove novelty — the engine skips the authoritative anti-join on it),
-bounded false-positive rate, merge/state round-trips, and the partitioned
-(per-bucket) layout behaving identically to a monolithic filter."""
+bounded false-positive rate, merge/state round-trips, the distributed
+build agreeing with the driver-side one, and the OR accumulator that
+carries the engine's per-epoch increment being idempotent."""
 
 from __future__ import annotations
 
 import hashlib
 
 import pandas as pd
-import pytest
 
-from spacetime_crawler4py_spark.functions.bloom import BloomFilter, PartitionedBloom
+from spacetime_crawler4py_spark.functions.bloom import OR_BITS, BloomFilter
 
 
 def _hashes(prefix: str, n: int) -> list[str]:
@@ -52,30 +52,46 @@ def test_state_round_trip():
     assert (clone.bits == bf.bits).all()
 
 
-def test_partitioned_no_false_negatives_and_bounded_fp():
-    pb = PartitionedBloom.sized_for(len(SEEN), n_buckets=8)
-    pb.add_many(SEEN)
-    assert pb.might_contain_series(pd.Series(SEEN)).all()
-    assert pb.might_contain_series(pd.Series(FRESH)).mean() < 0.01
-
-
-def test_partitioned_state_round_trip():
-    pb = PartitionedBloom.sized_for(2000, n_buckets=4)
-    pb.add_many(SEEN[:500])
-    clone = PartitionedBloom.from_state(pb.to_state())
-    assert clone.might_contain_series(pd.Series(SEEN[:500])).all()
-
-
-@pytest.mark.usefixtures("spark")
-def test_partitioned_distributed_build(spark):
+def test_distributed_build_equals_add_many(spark):
     df = spark.createDataFrame([(h,) for h in SEEN], "url_hash string").repartition(7)
-    pb = PartitionedBloom.build_partitioned(
-        df, "url_hash", n_buckets=8, n_items_hint=len(SEEN)
-    )
-    assert pb.might_contain_series(pd.Series(SEEN)).all()
-    assert pb.might_contain_series(pd.Series(FRESH)).mean() < 0.01
-    # distributed build == driver-side build on identical input
-    local = PartitionedBloom.sized_for(len(SEEN), n_buckets=8)
+    built = BloomFilter.build_from_df(df, "url_hash", n_items_hint=len(SEEN))
+    local = BloomFilter.sized_for(len(SEEN))
     local.add_many(SEEN)
-    for b in range(8):
-        assert (local.filters[b].bits == pb.filters[b].bits).all()
+    assert (built.n_bits, built.k) == (local.n_bits, local.k)
+    assert (built.bits == local.bits).all()
+
+
+def test_probe_and_mark_flags_and_increment():
+    bf = BloomFilter.sized_for(len(SEEN))
+    bf.add_many(SEEN[:2500])
+    keys = SEEN[2000:3000]
+    flags, inc = bf.probe_and_mark(keys)
+    assert (flags == bf.might_contain_series(pd.Series(keys)).to_numpy()).all()
+    assert flags[:500].all()  # no false negatives
+    alone = BloomFilter(bf.n_bits, bf.k)
+    alone.add_many(keys)
+    assert (inc == alone.bits).all()
+
+
+def test_or_accumulator_is_idempotent(spark):
+    bf = BloomFilter.sized_for(1000)
+    bf.add_many(SEEN[:100])
+    acc = spark.sparkContext.accumulator(None, OR_BITS)
+    acc.add(bf.bits.copy())
+    once = acc.value.copy()
+    acc.add(bf.bits.copy())
+    assert (acc.value == once).all() and (once == bf.bits).all()
+    # the same bitmap added by every task of a job (as retried or
+    # recomputed parse tasks would) is still the bitmap
+    acc.value = None
+    bits = bf.bits
+
+    def add(_rows):
+        acc.add(bits.copy())
+
+    spark.sparkContext.parallelize(range(4), 4).foreachPartition(add)
+    assert (acc.value == bits).all()
+    # tasks that add nothing send back the empty bitmap
+    acc.value = None
+    spark.sparkContext.parallelize(range(4), 4).foreachPartition(lambda _r: None)
+    assert acc.value is None

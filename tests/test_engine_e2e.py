@@ -10,6 +10,7 @@ from pyspark.sql.types import (
     BinaryType, IntegerType, StringType, StructField, StructType,
 )
 
+from spacetime_crawler4py_spark.functions.bloom import BloomFilter
 from spacetime_crawler4py_spark.oracle.pycrawler import OracleCrawler
 from spacetime_crawler4py_spark.sources.store import SnapshotStore
 from spacetime_crawler4py_spark.sources.webgen import generate_web
@@ -234,3 +235,96 @@ def test_relaxed_metrics_equal_table_counts(
             assert m.near_dups == n_fps - m.docs_saved
     if fps is not None:
         assert sum(m.near_dups for m in rows) > 0, "fixture has no near-dups"
+
+
+def test_relaxed_missing_web_row_gates_status(
+    spark, web, web_df, exact_run, tmp_path_factory
+):
+    """A dequeued URL with no fetch-oracle row costs that row a
+    ``status`` gate, not the epoch: the left join's null status arrives
+    in the parse stage as NaN."""
+    store, _ = exact_run
+    url = sorted(
+        r.url for r in store.read("fetch_log")
+        .where("gate = 'ok' and round > 0").collect()
+    )[0]
+    store, _ = _run_engine(
+        spark, web, web_df.where(F.col("url") != url),
+        tmp_path_factory.mktemp("missing_row"),
+        ordering="relaxed", neardup="off", rounds_per_epoch=2,
+    )
+    gates = {r.url: r.gate for r in store.read("fetch_log").collect()}
+    assert gates[url] == "status"
+    assert store.read("frontier").count() == store.read("seen").count()
+
+
+def _seen_filter(store, bloom: BloomFilter) -> BloomFilter:
+    """A filter of ``bloom``'s shape built from the seen table."""
+    return BloomFilter.build_from_df_with_shape(
+        store.read("seen"), "url_hash", bloom.n_bits, bloom.k
+    )
+
+
+def test_relaxed_bloom_bits_equal_seen_build(spark, web, web_df, tmp_path_factory):
+    """The parse stage's increment adds every probed outlink; without a
+    robots dim each one ends in the seen set, so the filter the epochs
+    keep up to date equals a fresh build from that set (no rebuild fires
+    with compaction off)."""
+    store, engine = _run_engine(
+        spark, web, web_df, tmp_path_factory.mktemp("bloom_bits"),
+        ordering="relaxed", neardup="off", rounds_per_epoch=2,
+    )
+    assert (engine._bloom.bits == _seen_filter(store, engine._bloom).bits).all()
+
+
+def test_relaxed_bloom_bits_cover_seen_with_robots(
+    spark, web, web_df, tmp_path_factory
+):
+    """Robots-blocked links pass through the probe too: their bits may be
+    set, so the filter covers the seen set (never a false negative) and
+    may hold more."""
+    from urllib.parse import urlsplit
+
+    blocked_host = sorted(
+        {urlsplit(u).netloc for u in web.pages}
+        - {urlsplit(u).netloc for u in web.seeds}
+    )[0]
+    robots_df = spark.createDataFrame(
+        [(blocked_host, ["-/"])], "host string, rules array<string>"
+    )
+    store = SnapshotStore(spark, str(tmp_path_factory.mktemp("bloom_robots")))
+    engine = CrawlEngine(
+        spark, store, web_df,
+        EngineConfig(ordering="relaxed", neardup="off", rounds_per_epoch=2),
+        robots_df=robots_df,
+    )
+    engine.seed(web.seeds)
+    engine.run()
+    seen_bits = _seen_filter(store, engine._bloom).bits
+    assert ((engine._bloom.bits | seen_bits) == engine._bloom.bits).all()
+    seen_urls = {r.url for r in store.read("frontier").collect()}
+    assert blocked_host not in {urlsplit(u).netloc for u in seen_urls}
+
+
+def test_bloom_answers_never_change_the_crawl(spark, web, web_df, tmp_path_factory):
+    """The filter is advisory: a saturated one (every probe answers maybe
+    seen) and none at all crawl the same tables as the default config."""
+
+    def crawl(name: str, saturate: bool = False, **cfg):
+        store = SnapshotStore(spark, str(tmp_path_factory.mktemp(name)))
+        engine = CrawlEngine(
+            spark, store, web_df, EngineConfig(rounds_per_epoch=4, **cfg)
+        )
+        if saturate:
+            engine._bloom.bits[:] = 0xFF
+        engine.seed(web.seeds)
+        engine.run()
+        return {
+            table: sorted(tuple(r) for r in store.read(table).collect())
+            for table in ("seen", "frontier", "documents")
+        }
+
+    default = crawl("bloom_default")
+    assert default["documents"]
+    assert crawl("bloom_saturated", saturate=True) == default
+    assert crawl("bloom_off", use_bloom=False) == default
