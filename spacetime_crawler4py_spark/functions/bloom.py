@@ -29,7 +29,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.accumulators import AccumulatorParam
 
 __all__ = ["BloomFilter", "OR_BITS"]
@@ -94,13 +93,6 @@ class BloomFilter:
         probe = (self.bits[pos // 8] >> (pos % 8).astype(np.uint8)) & 1
         return probe.all(axis=1)
 
-    def might_contain_series(self, hex_hashes: pd.Series) -> pd.Series:
-        if hex_hashes.empty:
-            return pd.Series([], dtype=bool)
-        return pd.Series(
-            self._contains(self._positions(hex_hashes)), index=hex_hashes.index
-        )
-
     def probe_and_mark(self, hex_hashes: list[str]) -> tuple[np.ndarray, np.ndarray]:
         """One vectorized pass over non-empty ``hex_hashes``: the maybe-seen
         flag per key, and the bitmap of every probed key's bits (the
@@ -151,13 +143,3 @@ class BloomFilter:
             out.bits |= np.frombuffer(row.bits, dtype=np.uint8)
         return out
 
-    # -- (de)serialization ----------------------------------------------------
-    def to_state(self) -> tuple[int, int, bytes]:
-        return (self.n_bits, self.k, self.bits.tobytes())
-
-    @classmethod
-    def from_state(cls, state: tuple[int, int, bytes]) -> "BloomFilter":
-        n_bits, k, raw = state
-        bf = cls(n_bits, k)
-        bf.bits = np.frombuffer(raw, dtype=np.uint8).copy()
-        return bf

@@ -21,6 +21,14 @@ Manifests are JSON files swapped with ``os.replace`` (atomic on POSIX);
 every manifest version is retained, so a reader never sees a partial
 commit and history stays navigable.
 
+Each manifest also records the table's schema (the Spark ``StructType``
+JSON), ≙ the schema in Iceberg table metadata: a read declares it, so
+Spark never launches a job to open a parquet footer and infer it. The
+first commit's schema stands, as it did when reads inferred from the
+first path's file; ``compact`` and ``overwrite_rows`` record the new
+base's. A manifest written without a ``schema`` key is read by
+inference.
+
 Appends to *distinct* tables may run concurrently (each commit touches
 only its own table's manifest), but two appends to one table may not:
 both would read the same current version and the later swap would drop
@@ -35,6 +43,7 @@ from typing import TYPE_CHECKING
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
+    from pyspark.sql.types import StructType
 
 __all__ = ["SnapshotStore"]
 
@@ -64,14 +73,21 @@ class SnapshotStore:
             return json.load(f)
 
     def _commit(
-        self, name: str, paths: list[str], properties: dict | None = None
+        self, name: str, paths: list[str], properties: dict | None = None,
+        schema: "StructType | None" = None,
     ) -> int:
+        """Swap in a manifest over ``paths``; ``schema`` replaces the
+        recorded one (None carries it forward)."""
         cur = self._load_manifest(name)
         version = cur["version"] + 1
         props = dict(cur.get("properties", {}))
         if properties:
             props.update(properties)
         manifest = {"version": version, "paths": paths, "properties": props}
+        if schema is not None:
+            manifest["schema"] = schema.jsonValue()
+        elif "schema" in cur:
+            manifest["schema"] = cur["schema"]
         versioned = self._manifest_path(name, version)
         # same tmp+rename dance as the current pointer below: a crash
         # mid-write must leave no torn JSON for read_version() to choke on
@@ -95,6 +111,15 @@ class SnapshotStore:
         against mixing incompatible fingerprint hash schemes."""
         return self._load_manifest(name).get("properties", {}).get(key)
 
+    def _reader(self, manifest: dict):
+        """A reader declaring the manifest's recorded schema; inference
+        (one footer-reading job) only for manifests that carry none."""
+        if "schema" not in manifest:
+            return self.spark.read
+        from pyspark.sql.types import StructType
+
+        return self.spark.read.schema(StructType.fromJson(manifest["schema"]))
+
     def set_property(self, name: str, key: str, value) -> int:
         cur = self._load_manifest(name)
         return self._commit(name, cur["paths"], {key: value})
@@ -116,7 +141,11 @@ class SnapshotStore:
         if sort_by:
             df = df.sort(*sort_by)
         df.write.mode("overwrite").parquet(delta_dir)
-        return self._commit(name, cur["paths"] + [delta_dir])
+        return self._commit(
+            name, cur["paths"] + [delta_dir],
+            # the table's first commit fixes its schema
+            schema=None if cur["paths"] else df.schema,
+        )
 
     def append_rows(self, name: str, rows: list[dict], arrow_schema) -> int:
         """Driver-side append of a small row batch via pyarrow — same commit
@@ -126,13 +155,17 @@ class SnapshotStore:
         delta dirs read back under one schema."""
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
 
         cur = self._load_manifest(name)
         delta_dir = os.path.join(self._tdir(name), f"delta-{cur['version'] + 1:06d}")
         os.makedirs(delta_dir, exist_ok=True)
         table = pa.Table.from_pylist(rows, schema=arrow_schema)
         pq.write_table(table, os.path.join(delta_dir, "part-00000.parquet"))
-        return self._commit(name, cur["paths"] + [delta_dir])
+        return self._commit(
+            name, cur["paths"] + [delta_dir],
+            schema=None if cur["paths"] else from_arrow_schema(arrow_schema),
+        )
 
     def overwrite_rows(self, name: str, rows: list[dict], arrow_schema) -> int:
         """Driver-side full-snapshot replace for small state tables (e.g.
@@ -140,6 +173,7 @@ class SnapshotStore:
         a manifest referencing only it — compact() semantics, no Spark job."""
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
 
         base_dir = os.path.join(
             self._tdir(name), f"base-{self.current_version(name) + 1:06d}"
@@ -147,7 +181,9 @@ class SnapshotStore:
         os.makedirs(base_dir, exist_ok=True)
         table = pa.Table.from_pylist(rows, schema=arrow_schema)
         pq.write_table(table, os.path.join(base_dir, "part-00000.parquet"))
-        return self._commit(name, [base_dir])
+        return self._commit(
+            name, [base_dir], schema=from_arrow_schema(arrow_schema)
+        )
 
     def compact(
         self, name: str, df: "DataFrame | None" = None,
@@ -166,7 +202,7 @@ class SnapshotStore:
             self._tdir(name), f"base-{self.current_version(name) + 1:06d}"
         )
         df.write.mode("overwrite").parquet(base_dir)
-        return self._commit(name, [base_dir], properties)
+        return self._commit(name, [base_dir], properties, schema=df.schema)
 
     def compact_tail(
         self,
@@ -198,7 +234,7 @@ class SnapshotStore:
             j = i
         if len(paths) - j < min_merge:
             return None
-        df = self.spark.read.parquet(*paths[j:])
+        df = self._reader(manifest).parquet(*paths[j:])
         if sort_by:
             df = df.sort(*sort_by)
         merged_dir = os.path.join(
@@ -222,7 +258,7 @@ class SnapshotStore:
         manifest = self._load_manifest(name, version)
         if not manifest["paths"]:
             raise FileNotFoundError(f"table {name} is empty (no snapshot)")
-        return self.spark.read.parquet(*manifest["paths"])
+        return self._reader(manifest).parquet(*manifest["paths"])
 
     def read_or_none(self, name: str, version: int | None = None):
         try:
@@ -236,4 +272,4 @@ class SnapshotStore:
         manifest = self._load_manifest(name)
         if not manifest["paths"]:
             raise FileNotFoundError(f"table {name} is empty (no snapshot)")
-        return self.spark.read.parquet(manifest["paths"][-1])
+        return self._reader(manifest).parquet(manifest["paths"][-1])

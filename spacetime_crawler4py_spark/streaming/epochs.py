@@ -384,10 +384,12 @@ class CrawlEngine:
     ) -> DataFrame:
         """THE watermark advance, in one place (resume sync, seeding,
         epoch commit): merge the old dim with optional served increments
-        ``(domain, _add)`` and enqueue maxima ``(domain, _dmax)``;
-        served' = served + _add, enqueued' = max(enqueued, _dmax). One
-        union + per-domain aggregation (a single shuffle with map-side
-        combine). Any input may be None; at least one must not be."""
+        ``(domain, _add)`` and enqueue candidates ``(domain, _dmax)``;
+        served' = served + sum(_add), enqueued' = max(enqueued, max(_dmax)).
+        Both take raw rows (a domain may repeat), so callers need not
+        pre-aggregate: one union + per-domain aggregation is a single
+        shuffle with map-side combine. Any input may be None; at least one
+        must not be."""
         zero = F.lit(0).cast("bigint")
         parts = []
         if wm is not None:
@@ -424,10 +426,9 @@ class CrawlEngine:
             row = wm.agg(F.max("served").alias("m")).collect()[0]
             self._max_served_bound = int(row.m or 0)
         if frontier is not None:
-            fmax = frontier.groupBy("domain").agg(F.max("seq").alias("_dmax"))
-            self.store.compact(
-                "watermarks", self._merged_watermarks(wm, enq=fmax)
-            )
+            self.store.compact("watermarks", self._merged_watermarks(
+                wm, enq=frontier.select("domain", F.col("seq").alias("_dmax"))
+            ))
 
     def _merge_enqueued(self, maxima: dict[str, int]) -> None:
         """Fold a small {domain: max assigned seq} map (seeding) into the
@@ -804,17 +805,11 @@ class CrawlEngine:
             dequeued, (bloom, bloom_acc) if bloom is not None else None
         )
         parsed.persist()
-        # one job materializes the fetch+parse AND yields the per-domain
-        # served counts for the watermark advance, kept as a persisted
-        # DataFrame; only the global pop and parsed-ok counts come to the
-        # driver
-        adds_df = parsed.groupBy("domain").agg(
-            F.count("*").alias("_add"),
-            F.count_if(F.col("gate") == "ok").alias("_ok"),
-        ).persist()
-        totals = adds_df.agg(
-            F.coalesce(F.sum("_add"), F.lit(0)),
-            F.coalesce(F.sum("_ok"), F.lit(0)),
+        # one global aggregate materializes the fetch+parse (filling the
+        # Bloom accumulator) and brings only the pop and parsed-ok counts to
+        # the driver; the watermark advance reads the persisted rows itself
+        totals = parsed.agg(
+            F.count("*"), F.count_if(F.col("gate") == "ok")
         ).collect()[0]
         pops, parsed_ok = int(totals[0]), int(totals[1])
         if bloom is not None:
@@ -830,7 +825,6 @@ class CrawlEngine:
             bloom_acc.value = None
         if pops == 0:
             parsed.unpersist()
-            adds_df.unpersist()
             if bloom is not None:
                 bloom.destroy()
             return False
@@ -1057,16 +1051,20 @@ class CrawlEngine:
         # advance the per-domain served watermarks last: a crash earlier in
         # the epoch leaves the persisted snapshot untouched, so resume
         # replays the whole epoch (at-least-once fetch). Distributed merge
-        # of the old dim, the served-adds and this epoch's enqueue maxima,
-        # compacted as the new snapshot. O(domains) stays on the executors;
-        # the driver advances only its O(1) served upper bound.
-        delta_max = delta.groupBy("domain").agg(F.max("seq").alias("_dmax"))
+        # of the old dim with this epoch's raw rows — one served-add per pop,
+        # one enqueue candidate per new frontier row — compacted as the new
+        # snapshot. O(domains) stays on the executors; the driver advances
+        # only its O(1) served upper bound.
         self.store.compact(
-            "watermarks", self._merged_watermarks(wm, adds_df, delta_max),
+            "watermarks",
+            self._merged_watermarks(
+                wm,
+                parsed.select("domain", F.lit(1).alias("_add")),
+                delta.select("domain", F.col("seq").alias("_dmax")),
+            ),
             properties={"next_round": base + tokens},
         )
         self._max_served_bound += tokens
-        adds_df.unpersist()
         parsed.unpersist()
         if bloom is not None:
             bloom.destroy()

@@ -1,14 +1,14 @@
 """Bloom seen-filter properties: no false negatives ever (a False probe
 must prove novelty — the engine skips the authoritative anti-join on it),
-bounded false-positive rate, merge/state round-trips, the distributed
-build agreeing with the driver-side one, and the OR accumulator that
-carries the engine's per-epoch increment being idempotent."""
+bounded false-positive rate, merges, the pickle round-trip that ships
+the filter to the workers (``sc.broadcast``), the distributed build
+agreeing with the driver-side one, and the OR accumulator that carries
+the engine's per-epoch increment being idempotent."""
 
 from __future__ import annotations
 
 import hashlib
-
-import pandas as pd
+import pickle
 
 from spacetime_crawler4py_spark.functions.bloom import OR_BITS, BloomFilter
 
@@ -21,16 +21,20 @@ SEEN = _hashes("seen", 5000)
 FRESH = _hashes("fresh", 5000)
 
 
+def _flags(bf: BloomFilter, keys: list[str]):
+    return bf.probe_and_mark(keys)[0]
+
+
 def test_no_false_negatives():
     bf = BloomFilter.sized_for(len(SEEN))
     bf.add_many(SEEN)
-    assert bf.might_contain_series(pd.Series(SEEN)).all()
+    assert _flags(bf, SEEN).all()
 
 
 def test_false_positive_rate_bounded():
     bf = BloomFilter.sized_for(len(SEEN))
     bf.add_many(SEEN)
-    fp = bf.might_contain_series(pd.Series(FRESH)).mean()
+    fp = _flags(bf, FRESH).mean()
     # 12 bits/key with k=8 gives fpp ~ 3e-4; allow generous slack
     assert fp < 0.01, fp
 
@@ -41,15 +45,19 @@ def test_merge_equals_union():
     a.add_many(SEEN[:2500])
     b.add_many(SEEN[2500:])
     a.merge_inplace(b)
-    assert a.might_contain_series(pd.Series(SEEN)).all()
+    assert _flags(a, SEEN).all()
 
 
-def test_state_round_trip():
+def test_pickle_round_trip():
     bf = BloomFilter.sized_for(1000)
     bf.add_many(SEEN[:100])
-    clone = BloomFilter.from_state(bf.to_state())
-    assert clone.might_contain_series(pd.Series(SEEN[:100])).all()
+    clone = pickle.loads(pickle.dumps(bf))
+    assert (clone.n_bits, clone.k) == (bf.n_bits, bf.k)
     assert (clone.bits == bf.bits).all()
+    assert _flags(clone, SEEN[:100]).all()
+    # the clone owns its bitmap: marking it leaves the original unchanged
+    clone.add_many(FRESH[:100])
+    assert not (clone.bits == bf.bits).all()
 
 
 def test_distributed_build_equals_add_many(spark):
@@ -66,8 +74,12 @@ def test_probe_and_mark_flags_and_increment():
     bf.add_many(SEEN[:2500])
     keys = SEEN[2000:3000]
     flags, inc = bf.probe_and_mark(keys)
-    assert (flags == bf.might_contain_series(pd.Series(keys)).to_numpy()).all()
     assert flags[:500].all()  # no false negatives
+    assert flags[500:].mean() < 0.01  # the unadded half is mostly new
+    # probing marks nothing in the filter itself
+    before = bf.bits.copy()
+    bf.probe_and_mark(keys)
+    assert (bf.bits == before).all()
     alone = BloomFilter(bf.n_bits, bf.k)
     alone.add_many(keys)
     assert (inc == alone.bits).all()

@@ -4,6 +4,9 @@ set, and span sequences (north_rule parity targets)."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -328,3 +331,70 @@ def test_bloom_answers_never_change_the_crawl(spark, web, web_df, tmp_path_facto
     assert default["documents"]
     assert crawl("bloom_saturated", saturate=True) == default
     assert crawl("bloom_off", use_bloom=False) == default
+
+
+@pytest.fixture(scope="module")
+def relaxed_compact_run(spark, web, web_df, tmp_path_factory):
+    """Relaxed crawl with LSH on and compaction after every epoch, so
+    ``compact`` and ``compact_tail`` write snapshots too."""
+    return _run_engine(
+        spark, web, web_df, tmp_path_factory.mktemp("relaxed_compact"),
+        ordering="relaxed", neardup="lsh", rounds_per_epoch=2,
+        compact_every=1,
+    )
+
+
+def _tables(store) -> list[str]:
+    return sorted(t for t in os.listdir(store.base_dir) if store.exists(t))
+
+
+def _rows(df) -> list[str]:
+    return sorted(str(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("run", ["relaxed_compact_run", "exact_run"])
+def test_declared_schema_equals_inferred(spark, request, run):
+    """Every state table reads back under its recorded schema exactly as
+    parquet inference would read it: the relaxed crawl writes through
+    Spark appends, ``compact`` and ``compact_tail``; the exact crawl
+    through pyarrow ``append_rows``."""
+    store, _ = request.getfixturevalue(run)
+    tables = _tables(store)
+    expected = {"frontier", "seen", "completions", "documents",
+                "fingerprints", "fetch_log", "metrics"}
+    if run == "relaxed_compact_run":
+        expected.add("watermarks")
+        paths = [
+            p for t in tables for p in store._load_manifest(t)["paths"]
+        ]
+        assert any("/base-" in p for p in paths)
+        assert any("/tier-" in p for p in paths)
+    assert set(tables) == expected
+    for t in tables:
+        manifest = store._load_manifest(t)
+        assert "schema" in manifest, t
+        inferred = spark.read.parquet(*manifest["paths"]).schema
+        assert store.read(t).schema == inferred, t
+
+
+def test_manifest_without_schema_reads_by_inference(
+    spark, web_df, relaxed_compact_run, tmp_path
+):
+    """A store whose manifests predate the recorded schema reads the same
+    rows under the same schema, and still resumes."""
+    store, _ = relaxed_compact_run
+    legacy = SnapshotStore(spark, str(tmp_path))
+    for t in _tables(store):
+        manifest = store._load_manifest(t)
+        del manifest["schema"]
+        with open(legacy._manifest_path(t), "w", encoding="utf-8") as f:
+            json.dump(manifest, f)
+        assert legacy.read(t).schema == store.read(t).schema, t
+        assert _rows(legacy.read(t)) == _rows(store.read(t)), t
+    engine = CrawlEngine(
+        spark, legacy, web_df,
+        EngineConfig(ordering="relaxed", neardup="lsh", rounds_per_epoch=2),
+    )
+    summary = engine.run()
+    assert summary["urls_seen"] == store.read("seen").count()
+    assert summary["urls_done"] == summary["urls_seen"]

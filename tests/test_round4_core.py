@@ -279,13 +279,11 @@ def test_bloom_rebuild_restores_fpr(spark, web, web_df, tmp_path):
     assert big is not small and big.n_bits > small.n_bits
     assert big.fill_rate() < 0.5
     # no false negatives: every seen key still probes True
-    import pandas as pd
-
-    probe = big.might_contain_series(pd.Series(seen_hashes + extra))
+    probe, _ = big.probe_and_mark(seen_hashes + extra)
     assert bool(probe.all())
     # bounded false positives: disjoint probe keys
-    fresh = pd.Series(
-        [hashlib.sha256(f"fresh:{i}".encode()).hexdigest() for i in range(5000)]
-    )
-    fpr = float(big.might_contain_series(fresh).mean())
+    fresh = [
+        hashlib.sha256(f"fresh:{i}".encode()).hexdigest() for i in range(5000)
+    ]
+    fpr = float(big.probe_and_mark(fresh)[0].mean())
     assert fpr < 0.05, f"false-positive rate {fpr} after rebuild"

@@ -72,6 +72,39 @@ def test_relaxed_engine_holds_no_per_domain_dict(spark, web, web_df, tmp_path):
     assert all(served == enq for served, enq in wm.values()), wm
 
 
+def test_merged_watermarks_take_raw_rows(spark):
+    """The watermark advance sums raw served-adds and maxes raw enqueue
+    candidates per domain: duplicate-domain rows give the same table as
+    inputs pre-aggregated to one row per domain."""
+    wm = spark.createDataFrame(
+        [("a", 2, 5), ("b", 0, 1), ("c", 4, 4)],
+        "domain string, served bigint, enqueued bigint",
+    )
+    adds = spark.createDataFrame(
+        [("a",), ("a",), ("b",), ("d",), ("d",), ("d",)], "domain string"
+    ).select("domain", F.lit(1).alias("_add"))
+    enq = spark.createDataFrame(
+        [("a", 7), ("a", 9), ("a", 8), ("b", 1), ("e", 2), ("e", 1)],
+        "domain string, _dmax bigint",
+    )
+    pre_adds = adds.groupBy("domain").agg(F.count("*").alias("_add"))
+    pre_enq = enq.groupBy("domain").agg(F.max("_dmax").alias("_dmax"))
+
+    def table(*parts):
+        merged = CrawlEngine._merged_watermarks(*parts)
+        assert merged.columns == ["domain", "served", "enqueued"]
+        return sorted(tuple(r) for r in merged.collect())
+
+    raw = table(wm, adds, enq)
+    assert raw == table(wm, pre_adds, pre_enq)
+    assert raw == [
+        ("a", 4, 9), ("b", 1, 1), ("c", 4, 4), ("d", 3, 0), ("e", 0, 2),
+    ]
+    # no prior dim (a first epoch) and single inputs (resume sync)
+    assert table(None, adds, enq) == table(None, pre_adds, pre_enq)
+    assert table(wm, None, enq) == table(wm, None, pre_enq)
+
+
 def test_store_mode_resume(spark, web, web_df, tmp_path):
     cfg = dict(ordering="relaxed", neardup="off", rounds_per_epoch=2)
     store_a = SnapshotStore(spark, str(tmp_path / "sa"))
